@@ -5,7 +5,9 @@ SimilarityFlooding.java:472-575 — bounded rounds + convergence check +
 per-round checkpoint to cut lineage).
 
 Canonical id of a cluster = min(entity_id) over the component → stable across
-runs and parallelism levels.
+runs and parallelism levels. ``canonicalize`` (the KG's node ids) does not
+iterate: its input is a 1-1 alignment, whose components have at most two
+nodes.
 
 Round 4: the default algorithm is the two-phase large-star/small-star
 alternation (Kiveris et al., "Connected Components in MapReduce and
@@ -179,8 +181,20 @@ def hash_min_components(
 
 def canonicalize(alignment: DataFrame, entities: DataFrame) -> DataFrame:
     """alignment(src_id, dst_id) + entities → entities with ``canonical_id``
-    (= component min id; singletons keep their own id)."""
-    comps = connected_components(alignment)
+    (= component min id; singletons keep their own id).
+
+    Precondition: ``alignment`` is 1-1 between disjoint id sets (no src_id
+    and no dst_id repeats, and no id is both), as ``select_one_to_one``
+    outputs. Every component then has at most two nodes, so its min id is
+    ``least(src_id, dst_id)`` and one projection plus one join replaces the
+    iterative ``connected_components``, which stays the operator for
+    general graphs (dedup clusters, assignment blocks)."""
+    pair_min = F.least("src_id", "dst_id").alias("component_id")
+    comps = alignment.select(
+        F.col("src_id").alias("entity_id"), pair_min
+    ).unionByName(
+        alignment.select(F.col("dst_id").alias("entity_id"), pair_min)
+    )
     return entities.join(
         comps, entities.entity_id == comps.entity_id, "left"
     ).select(

@@ -169,7 +169,7 @@ def vmm(pairs: DataFrame, src: DataFrame, dst: DataFrame) -> DataFrame:
     s_docs = src.select(F.col("entity_id").alias("doc_id"), "doc_tokens")
     d_docs = dst.select(F.col("entity_id").alias("doc_id"), "doc_tokens")
     corpus = s_docs.unionByName(d_docs)
-    w = tfidf_weights(corpus).cache()
+    w = tfidf_weights(corpus)
 
     norms = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
 

@@ -19,7 +19,9 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class CheckpointStore:
@@ -66,9 +68,19 @@ class CheckpointStore:
         return os.path.exists(self._manifest_path(stage))
 
     def read(self, stage: str) -> DataFrame:
+        """A committed stage. The parquet read takes its schema from the
+        manifest, so it runs no schema-inference job (parquet reads make
+        every column nullable, as inference would)."""
         if self.fmt == "iceberg":
             return self.spark.read.table(self._table(stage))
-        return self.spark.read.parquet(self._data_path(stage))
+        schema = T.StructType.fromJson(self.manifest(stage)["schema"])
+        return self.spark.read.schema(schema).parquet(self._data_path(stage))
+
+    def rows(self, stage: str) -> int:
+        """Row count of a committed stage, from its manifest (no job)."""
+        if self.fmt == "iceberg":
+            return self.read(stage).count()
+        return self.manifest(stage)["rows"]
 
     def invalidate(self, stage: str) -> None:
         if self.fmt == "iceberg":
@@ -88,7 +100,12 @@ class CheckpointStore:
         If the stage's manifest exists, the computation is skipped and the
         snapshot is read back — this is the kill-and-restart resume path
         (FIXTURES.md §3.9). Manifest is written only after the data commit
-        succeeds, so a killed write never looks complete."""
+        succeeds, so a killed write never looks complete.
+
+        A parquet commit is the write's own job(s) and nothing else: the
+        row count is observed on the write, and the read-back takes the
+        written frame's schema, so neither a re-count nor a schema
+        inference runs."""
         if not force and self.is_complete(name):
             return self.read(name)
         # crash injection for the kill-and-restart resume test
@@ -105,14 +122,16 @@ class CheckpointStore:
             df.writeTo(self._table(name)).using("iceberg").createOrReplace()
             return self.read(name)
         path = self._data_path(name)
-        df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
+        obs = Observation(f"checkpoint_{name}")
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(path)
         manifest = {
             "stage": name,
             "format": self.fmt,
             "path": path,
-            "rows": out.count(),
-            "schema": out.schema.jsonValue(),
+            "rows": obs.get["rows"],
+            "schema": df.schema.jsonValue(),
             "inputs": inputs or [],
             # stage metrics (north rule: checkpoints carry lineage + metrics)
             "wall_sec": round(time.time() - t0, 3),
@@ -129,7 +148,7 @@ class CheckpointStore:
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path(name))  # atomic commit
-        return out
+        return self.read(name)
 
     # -- store-level metadata (code/config fingerprint) ---------------------
 

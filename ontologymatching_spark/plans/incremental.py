@@ -61,6 +61,8 @@ which reloads a WHOLE previous result rather than merging a diff).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,6 +73,7 @@ from .pipeline import (
     KGPipeline,
     PipelineConfig,
     apply_structural_boost,
+    assign_side,
     combine_scores,
 )
 
@@ -84,11 +87,8 @@ LINEAGE = ["repo", "path", "content_sha256"]
 
 def _prepare(src_files: DataFrame) -> DataFrame:
     e = matchers.prepare_entities(extract_entities(src_files))
-    e = matchers.with_virtual_doc(e)
-    org = F.regexp_extract(F.col("repo"), r"org(\d+)", 1).cast("int")
-    return e.withColumn(
-        "side", F.when(org % 2 == 0, F.lit("src")).otherwise(F.lit("dst"))
-    ).filter(F.col("kind").isin("class", "function"))
+    e = assign_side(matchers.with_virtual_doc(e), src_files)
+    return e.filter(F.col("kind").isin("class", "function"))
 
 
 def incremental_match(
@@ -227,9 +227,10 @@ class IncrementalKGPipeline:
 
     def run(self, src_files_v2: DataFrame,
             with_stats: bool = True) -> dict[str, DataFrame]:
-        """``with_stats=False`` skips the four reuse-accounting count jobs
-        (one of which re-evaluates the reusable-scores subtree) — they are
-        diagnostics, not pipeline outputs, and at small corpora they cost
+        """``with_stats=False`` skips the reuse-accounting count (one
+        grouped count that re-evaluates the reusable-scores subtree;
+        ``n_pairs`` is the candidate_pairs manifest's row count) — it is
+        a diagnostic, not a pipeline output, and at small corpora it costs
         as much as the reuse saves."""
         cfg = self.cfg
         st = self.store
@@ -308,12 +309,7 @@ class IncrementalKGPipeline:
                 ["repo", "path"], "left_semi",
             )
             e = matchers.prepare_entities(fresh_raw)
-            e = matchers.with_virtual_doc(e)
-            org = F.regexp_extract(F.col("repo"), r"org(\d+)", 1).cast("int")
-            fresh = e.withColumn(
-                "side",
-                F.when(org % 2 == 0, F.lit("src")).otherwise(F.lit("dst")),
-            )
+            fresh = assign_side(matchers.with_virtual_doc(e), changed_files)
             reused = _reuse("prepared")
             return reused.unionByName(fresh.select(*reused.columns))
 
@@ -463,16 +459,24 @@ class IncrementalKGPipeline:
 
         self.last_stats = None
         if with_stats:
+            # one grouped count over the three frames, not a count each
+            parts = {"files": v2, "changed": changed_files,
+                     "reusable": _reusable_scores()}
+            tagged = [df.select(F.lit(k).alias("part"))
+                      for k, df in parts.items()]
+            n = dict(
+                reduce(DataFrame.unionByName, tagged)
+                .groupBy("part").count().collect()
+            )
+            n_pairs = st.rows("candidate_pairs")
             self.last_stats = {
-                "n_files": v2.count(),
-                "n_files_changed": changed_files.count(),
-                "n_pairs": pairs.count(),
+                "n_files": n.get("files", 0),
+                "n_files_changed": n.get("changed", 0),
+                "n_pairs": n_pairs,
                 # pairs that could NOT reuse a previous BSM/PSM row — new
-                # pairs plus pairs with a changed endpoint
-                "n_pairs_rescored": pairs.join(
-                    _reusable_scores().select("src_id", "dst_id"),
-                    ["src_id", "dst_id"], "left_anti",
-                ).count(),
+                # pairs plus pairs with a changed endpoint (the reusable
+                # rows are a subset of the distinct candidate pairs)
+                "n_pairs_rescored": n_pairs - n.get("reusable", 0),
             }
 
         return {

@@ -101,6 +101,41 @@ def combine_scores(pf: DataFrame, cfg: "PipelineConfig") -> DataFrame:
     )
 
 
+def assign_side(entities: DataFrame, src_files: DataFrame) -> DataFrame:
+    """entities + ``side`` ('src' | 'dst'), the half of the match each
+    entity sits on. A ``side`` column on ``src_files`` (one value per repo)
+    decides it when present; otherwise the synthetic generator's rule does:
+    even ``orgN`` index = source, odd = target. A repo outside that naming,
+    a repo given two sides, or a side other than 'src'/'dst' stops the
+    write with an error naming the repo (``raise_error`` runs inside the
+    stage's own job)."""
+    repo = F.col("repo")
+    if "side" not in src_files.columns:
+        digits = F.regexp_extract(repo, r"org(\d+)", 1)
+        side = (
+            F.when(digits == "", F.raise_error(F.concat(
+                F.lit("no side for repo '"), repo,
+                F.lit("': pass a 'side' column with src_files, or name "
+                      "repos orgN (even N = src, odd N = dst)"),
+            )))
+            .when(F.substring(digits, -1, 1).isin("0", "2", "4", "6", "8"),
+                  F.lit("src"))
+            .otherwise(F.lit("dst"))
+        )
+        return entities.withColumn("side", side)
+    sides = src_files.groupBy("repo").agg(
+        F.min("side").alias("lo"), F.max("side").alias("hi")
+    )
+    side = F.when(
+        (F.col("lo") == F.col("hi")) & F.col("lo").isin("src", "dst"),
+        F.col("lo"),
+    ).otherwise(F.raise_error(F.concat(
+        F.lit("repo '"), repo,
+        F.lit("' needs exactly one side, 'src' or 'dst'"),
+    )))
+    return entities.join(sides.select("repo", side.alias("side")), "repo")
+
+
 def apply_structural_boost(scored: DataFrame, triples: DataFrame,
                            prepared: DataFrame, src_e: DataFrame,
                            dst_e: DataFrame, cfg: "PipelineConfig") -> DataFrame:
@@ -133,8 +168,9 @@ def apply_structural_boost(scored: DataFrame, triples: DataFrame,
 
 class KGPipeline:
     """Source half = repos where pmod(hash(repo),2)==0 is NOT used — the
-    split column is explicit: callers pass a ``side`` column or we derive it
-    from the repo name (even/odd org index, matching corpus/generator.py)."""
+    split is explicit: callers pass a per-repo ``side`` column on
+    ``src_files`` or it is derived from the repo name (even/odd org index,
+    matching corpus/generator.py); see ``assign_side``."""
 
     def __init__(self, spark: SparkSession, store: CheckpointStore,
                  config: PipelineConfig | None = None):
@@ -207,12 +243,7 @@ class KGPipeline:
 
         def _prepared():
             e = matchers.prepare_entities(entities_raw)
-            e = matchers.with_virtual_doc(e)
-            # side split: even org index = source, odd = target
-            org = F.regexp_extract(F.col("repo"), r"org(\d+)", 1).cast("int")
-            return e.withColumn(
-                "side", F.when(org % 2 == 0, F.lit("src")).otherwise(F.lit("dst"))
-            )
+            return assign_side(matchers.with_virtual_doc(e), src_files)
 
         prepared = st.stage("prepared", _prepared, inputs=["entities"])
 

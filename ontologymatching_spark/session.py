@@ -15,6 +15,33 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str | None:
+    """A quarter of the memory this process may use, in MiB: physical
+    memory, capped by the cgroup limit when one is set (a container's
+    /proc/meminfo reports the host's RAM, not its limit). Local mode runs
+    driver and executors in one JVM, and the rest of the box is page cache,
+    Python workers and other processes; a fixed size either starves a large
+    host or gets the JVM OOM-killed on a small one. ``None`` where the OS
+    reports no physical memory size (no ``sysconf``): Spark's own default
+    applies."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return None
+    for limit_file in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2 ("max" when unlimited)
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(limit_file) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return f"{total // 4 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "ontologymatching-spark",
     master: str | None = None,
@@ -45,10 +72,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Deterministic timestamp semantics for the DuckDB oracle comparison.
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode runs driver+executors in ONE JVM: size the heap for all
-        # N threads' task memory, not a lone driver (8g at 32 threads on a
-        # 300k-file job GC-thrashed to a 15x slowdown; 48g is ~40% of the box)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # spill-aware input splits: 128 MiB partitions keep per-task state
@@ -68,4 +91,10 @@ def get_spark(
         )
         .config("spark.ui.showConsoleProgress", "false")
     )
+    # local mode runs driver+executors in ONE JVM: size the heap for all
+    # N threads' task memory, not a lone driver (8g at 32 threads on a
+    # 300k-file job GC-thrashed to a 15x slowdown)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory()
+    if driver_memory:
+        builder = builder.config("spark.driver.memory", driver_memory)
     return builder.getOrCreate()

@@ -48,7 +48,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -69,6 +69,10 @@ FILE_EVENT_SCHEMA = T.StructType(
 )
 
 CORPUS_COLS = ["repo", "path", "commit", "lang", "content"]
+# the columns of a corpus snapshot, read back without schema inference
+CORPUS_SCHEMA = T.StructType(
+    [f for f in FILE_EVENT_SCHEMA.fields if f.name in CORPUS_COLS]
+)
 
 
 def read_file_events(spark: SparkSession, src_dir: str,
@@ -145,11 +149,14 @@ class StreamingKGMaintainer:
 
         t0 = time.time()
         spark = self.spark
-        # last-writer-wins within the batch: the producer's seq is the total
+        # last-writer-wins within the batch: the producer's seq is the
         # order; (repo, path) ties beyond seq cannot occur in a well-formed
-        # log but the deterministic tie-break keeps the fold reproducible.
+        # log, and the rest of the event breaks them, so any two distinct
+        # events are ordered and the fold does not depend on row order.
         w = Window.partitionBy("repo", "path").orderBy(
-            F.col("seq").desc(), F.col("commit").desc()
+            F.col("seq").desc(), F.col("commit").desc(),
+            F.col("deleted").desc(), F.col("lang").desc(),
+            F.sha2(F.col("content"), 256).desc(),
         )
         latest = (
             batch_df.withColumn("_rn", F.row_number().over(w))
@@ -168,7 +175,9 @@ class StreamingKGMaintainer:
         if self.corpus_path is None:
             new_corpus = upserts
         else:
-            prev_corpus = spark.read.parquet(self.corpus_path)
+            prev_corpus = spark.read.schema(CORPUS_SCHEMA).parquet(
+                self.corpus_path
+            )
             # batch side is diff-sized: broadcast it into the anti-join so
             # the corpus side never shuffles (on a cluster this fold is one
             # Iceberg MERGE commit instead of a parquet rewrite)
@@ -184,10 +193,11 @@ class StreamingKGMaintainer:
         # round-3 single-file trap — ADVICE r05)
         from ..partitions import fan_parts
 
-        new_corpus.repartition(
-            min(fan_parts(new_corpus), 64)
+        n_files = Observation("corpus")
+        new_corpus.repartition(min(fan_parts(new_corpus), 64)).observe(
+            n_files, F.count(F.lit(1)).alias("n")
         ).write.mode("overwrite").parquet(cpath)
-        corpus = spark.read.parquet(cpath)
+        corpus = spark.read.schema(CORPUS_SCHEMA).parquet(cpath)
 
         store = CheckpointStore(
             spark, os.path.join(self.work_dir, f"store_v{self.version:05d}")
@@ -201,11 +211,9 @@ class StreamingKGMaintainer:
             )
             out = pipe.run(corpus, with_stats=self.with_stats)
             stats = pipe.last_stats
-        # every stage the next batch reuses is already materialized by
-        # st.stage; the two counts pin the tail (alignment/edges) so a
-        # crash between batches resumes from a complete snapshot
-        n_align = out["alignment"].count()
-        n_edges = out["edges"].count()
+        # every stage, the tail (alignment/edges) included, is committed by
+        # st.stage before run() returns, so a crash between batches resumes
+        # from a complete snapshot; the row counts come from the manifests
 
         self.corpus_path = cpath
         self.prev_store = store
@@ -214,9 +222,9 @@ class StreamingKGMaintainer:
             {
                 "batch_id": batch_id,
                 "version": self.version,
-                "n_files": corpus.count(),
-                "n_alignment": n_align,
-                "n_edges": n_edges,
+                "n_files": n_files.get["n"],
+                "n_alignment": store.rows("alignment"),
+                "n_edges": store.rows("edges"),
                 "stats": stats,
                 "wall_s": round(time.time() - t0, 3),
             }

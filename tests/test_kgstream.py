@@ -147,6 +147,12 @@ def test_stream_folds_to_final_corpus(spark, stream_run):
     got = spark.read.parquet(mt.corpus_path)
     want = spark.createDataFrame(v3[CORPUS_COLS])
     assert _rows(got, CORPUS_COLS) == _rows(want, CORPUS_COLS)
+    # the history's counts come from the write observation and the stage
+    # manifests, not from count jobs: they must still be the row counts
+    last = mt.history[-1]
+    assert last["n_files"] == len(v3)
+    assert last["n_alignment"] == mt.last_outputs["alignment"].count()
+    assert last["n_edges"] == mt.last_outputs["edges"].count()
 
 
 def test_stream_equals_batch_rebuild(spark, stream_run):
@@ -237,3 +243,31 @@ def test_stream_tombstone_only_batch(spark):
     assert _rows(mt.last_outputs["edges"], EDGE_COLS) == _rows(
         full["edges"], EDGE_COLS
     )
+
+
+def test_stream_equal_seq_commit_is_deterministic(spark):
+    """Two events for one (repo, path) with equal (seq, commit) but
+    different content: the fold must pick the same one whichever row comes
+    first in the batch."""
+    v1, _ = generate_corpus(n_repos=4, files_per_repo=2, seed=31)
+    ev = _events(v1, None, seq0=0)
+    twin = ev.iloc[0].copy()
+    twin["content"] = twin["content"] + "\nclass TwinWidget {\n}\n"
+    corpora = []
+    for first, second in ((ev.iloc[[0]], twin), (twin, ev.iloc[[0]])):
+        first = first.to_frame().T if isinstance(first, pd.Series) else first
+        second = (second.to_frame().T if isinstance(second, pd.Series)
+                  else second)
+        batch = pd.concat([first, second, ev.iloc[1:]], ignore_index=True)
+        batch["seq"] = batch["seq"].astype("int64")
+        batch["deleted"] = batch["deleted"].astype(bool)
+        mt = StreamingKGMaintainer(
+            spark, tempfile.mkdtemp(prefix="kgs_twin_")
+        )
+        mt.apply_batch(
+            spark.createDataFrame(batch[EVENT_COLS], schema=FILE_EVENT_SCHEMA),
+            0,
+        )
+        corpora.append(_rows(spark.read.parquet(mt.corpus_path), CORPUS_COLS))
+    assert corpora[0] == corpora[1]
+    assert len(corpora[0]) == len(v1)

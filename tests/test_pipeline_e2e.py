@@ -192,3 +192,101 @@ def test_checkpoint_format_gating(spark):
         CheckpointStore(spark, "lake.kg", fmt="iceberg")
     with pytest.raises(ValueError, match="unknown checkpoint format"):
         CheckpointStore(spark, "/tmp/x", fmt="orc")
+
+
+@pytest.mark.parametrize(
+    "config", [{}, {"structural_boost": "iism", "combination": "lwc"}],
+    ids=["default", "iism_lwc"],
+)
+def test_canonical_projection_equals_components(spark, config):
+    """``canonicalize`` projects canonical_id = least(src_id, dst_id); on
+    pipeline output (60-file hot-key corpus) that equals the min label of
+    the iterative connected components, because the alignment is 1-1
+    between disjoint id sets — the projection's precondition, pinned
+    here too."""
+    from pyspark.sql import functions as F
+
+    from ontologymatching_spark.operators import components
+    from ontologymatching_spark.plans.pipeline import PipelineConfig
+
+    src_files, _ = generate_corpus(n_repos=10, files_per_repo=6, seed=3,
+                                   hot_fraction=1.0, alias_fraction=0.9)
+    out = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kg_proj_")),
+        PipelineConfig(**config),
+    ).run(spark.createDataFrame(src_files))
+    a = out["alignment"].toPandas()
+    assert len(a) > 0
+    assert a["src_id"].is_unique and a["dst_id"].is_unique
+    assert not set(a["src_id"]) & set(a["dst_id"])
+
+    comps = components.connected_components(
+        out["alignment"].select("src_id", "dst_id")
+    )
+    want = (
+        out["entities"].join(comps, "entity_id", "left")
+        .select("entity_id", F.coalesce("component_id", "entity_id"))
+        .collect()
+    )
+    got = out["nodes"].select("entity_id", "canonical_id").collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert len(got) == out["entities"].count()
+
+
+def test_store_manifest_rows_and_schema(spark, e2e):
+    """A commit counts rows on the write and reads back with the manifest's
+    schema: both must equal what a re-count and parquet's own schema
+    inference give, for every pipeline stage and for an empty stage; a
+    resumed stage returns the committed rows."""
+    _, _, store = e2e
+    stages = ["triples", "entities", "prepared", "candidate_pairs",
+              "scored_pairs", "alignment", "nodes", "mentions", "links",
+              "edges"]
+    empty = CheckpointStore(spark, tempfile.mkdtemp(prefix="kg_empty_"))
+    empty.stage("none", lambda: store.read("alignment").limit(0))
+    for st, name in [(store, s) for s in stages] + [(empty, "none")]:
+        df = st.read(name)
+        assert st.manifest(name)["rows"] == df.count() == st.rows(name), name
+        assert df.schema == spark.read.parquet(st._data_path(name)).schema, name
+    assert empty.rows("none") == 0
+
+    resumed = store.stage("alignment", lambda: pytest.fail("recomputed"))
+    assert sorted(map(tuple, resumed.collect())) == sorted(
+        map(tuple, spark.read.parquet(store._data_path("alignment")).collect())
+    )
+
+
+def test_side_from_column_or_clear_error(spark):
+    """Repos outside the generator's orgN naming: an explicit per-repo
+    ``side`` column gives the orgN corpus's alignment; without one the
+    build stops with an error naming the repo, not a cast failure."""
+    src_files, _ = generate_corpus(n_repos=6, files_per_repo=3, seed=5)
+    org = src_files.repo.str.extract(r"org(\d+)")[0].astype(int)
+    want = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kg_org_"))
+    ).run(spark.createDataFrame(src_files))["alignment"]
+
+    team = src_files.assign(
+        repo=src_files.repo.str.replace("org", "team", regex=False),
+        side=(org % 2).map({0: "src", 1: "dst"}),
+    )
+    got = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kg_team_"))
+    ).run(spark.createDataFrame(team))["alignment"]
+
+    def rows(df, renamed):
+        out = sorted(tuple(r) for r in df.select(
+            "src_uri", "dst_uri", "sim").collect())
+        if renamed:
+            out = [(s.replace("team", "org", 1), d.replace("team", "org", 1),
+                    sim) for s, d, sim in out]
+        return out
+
+    assert len(rows(want, False)) > 0
+    assert rows(got, True) == rows(want, False)
+
+    # whichever task fails first names its repo
+    with pytest.raises(Exception, match=r"no side for repo 'team\d{4}/"):
+        KGPipeline(
+            spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kg_bad_"))
+        ).run(spark.createDataFrame(team.drop(columns="side")))

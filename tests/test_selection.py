@@ -3,6 +3,7 @@
 conflict-block fixture pinning greedy semantics."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ontologymatching_spark.operators import selection
@@ -49,8 +50,8 @@ def test_greedy_conflict_block(spark):
     assert got == {("a", "x"), ("b", "y")}
 
 
-def test_greedy_matches_sequential_oracle(spark):
-    # mutual-best fixpoint == sequential greedy on a random block
+def _block_rows():
+    """A random 20x20 block: 400 pairs with 6-digit sims."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -59,7 +60,17 @@ def test_greedy_matches_sequential_oracle(spark):
         for j in range(20):
             sim = float(np.round(rng.random(), 6))
             rows.append((i, 100 + j, f"s{i:02d}", f"d{j:02d}", sim))
-    out = selection.select_one_to_one(_pairs(spark, rows), threshold=0.0).toPandas()
+    return rows
+
+
+def _greedy_vs_sequential(spark, **kwargs):
+    """Select the random block and return the selection's stats, its pairs
+    and the sequential greedy's pairs."""
+    rows = _block_rows()
+    stats: dict = {}
+    out = selection.select_one_to_one(
+        _pairs(spark, rows), threshold=0.0, stats=stats, **kwargs
+    ).toPandas()
     got = {(r.src_uri, r.dst_uri) for r in out.itertuples()}
 
     ordered = sorted(rows, key=lambda r: (-r[4], r[2], r[3]))
@@ -70,7 +81,42 @@ def test_greedy_matches_sequential_oracle(spark):
         used_s.add(su)
         used_d.add(du)
         want.add((su, du))
+    return stats, got, want
+
+
+def test_greedy_matches_sequential_oracle(spark):
+    # below the tail bound the one-task tail selects the whole block
+    stats, got, want = _greedy_vs_sequential(spark)
+    assert stats == {"rounds": 0, "tail_rows": 400}
     assert got == want
+
+
+@pytest.mark.parametrize("tail_rows", [200, 0])
+def test_rounds_then_tail_match_sequential_oracle(spark, monkeypatch,
+                                                  tail_rows):
+    # above the bound mutual-best rounds run first: with 200 they leave a
+    # remainder to the tail, with 0 they select everything themselves
+    monkeypatch.setattr(selection, "TAIL_ROWS", tail_rows)
+    stats, got, want = _greedy_vs_sequential(spark)
+    assert stats["rounds"] > 0
+    if tail_rows:
+        assert 0 < stats["tail_rows"] <= tail_rows
+    else:
+        assert stats["tail_rows"] == 0
+    assert got == want
+
+
+def test_max_rounds_above_bound_skips_tail(spark, monkeypatch):
+    # one round leaves more than the bound: the tail is not handed the
+    # oversized remainder, and the selection is that round's pairs only
+    monkeypatch.setattr(selection, "TAIL_ROWS", 50)
+    stats, got, want = _greedy_vs_sequential(spark, max_rounds=1)
+    assert stats == {"rounds": 1, "tail_rows": 0}
+    first_round = selection.mutual_best_round(
+        _pairs(spark, _block_rows()), threshold=0.0
+    ).toPandas()
+    assert got == {(r.src_uri, r.dst_uri) for r in first_round.itertuples()}
+    assert got < want
 
 
 def test_topk_per_src(spark):
