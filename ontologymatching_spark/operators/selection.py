@@ -212,15 +212,6 @@ def mutual_best_round(pairs: DataFrame, threshold: float = 0.6) -> DataFrame:
     )
 
 
-def completion_filter(pairs: DataFrame, prior: DataFrame) -> DataFrame:
-    """Completion mode (AbstractMatcher.java:683-717): only consider pairs
-    whose source AND target are not already mapped by a prior alignment;
-    anti-join both sides."""
-    return pairs.join(
-        prior.select("src_id").distinct(), "src_id", "left_anti"
-    ).join(prior.select("dst_id").distinct(), "dst_id", "left_anti")
-
-
 def best_match_boosting(pairs: DataFrame, boost: float = 1.2) -> DataFrame:
     """BestMatchBoosting (boosting/BestMatchBoosting.java:17-79): multiply
     each source row's best pair by ``boost`` (clamped to 1)."""

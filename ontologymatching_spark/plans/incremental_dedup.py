@@ -1,5 +1,5 @@
 """Incremental dedup / ANN index maintenance — the file-local-reuse
-principle of ``IncrementalKGPipeline`` extended to the LLM-data-pipeline
+principle of ``KGPipeline``'s snapshot updates extended to the LLM-data-pipeline
 operators (VERDICT r04 next-round #7: "the missing piece of the 100-TB
 incremental story"). Between two corpus snapshots almost every document and
 embedding is unchanged, and the expensive halves of dedup/ANN are
@@ -32,9 +32,8 @@ what dominates at scale, while everything recomputed is either narrow
 (band keys, cell ids) or output-sized. The same store/manifest protocol as
 the KG pipeline makes each snapshot a resumable, roll-back-able commit.
 
-No reference analog: the reference is batch-only (see
-plans/incremental.py's docstring); the dedup/ANN operators themselves cite
-their sources in operators/dedup.py and operators/ann.py.
+No reference analog: the reference is batch-only; the dedup/ANN operators
+themselves cite their sources in operators/dedup.py and operators/ann.py.
 """
 
 from __future__ import annotations
@@ -91,7 +90,7 @@ class IncrementalDedupPlan:
     snapshots. ``full_*`` builds a store from scratch (the bootstrap AND
     the rebuild comparator); ``run_*`` reuses a previous snapshot's store.
     Reuse stats land on ``self.last_stats`` (dict), never in the returned
-    stage mapping — same contract as IncrementalKGPipeline."""
+    stage mapping — same contract as ``KGPipeline`` with ``prev``."""
 
     def __init__(self, spark: SparkSession, store: CheckpointStore,
                  prev_store: CheckpointStore | None = None,
@@ -106,7 +105,7 @@ class IncrementalDedupPlan:
 
     def _pin(self, name: str, df: DataFrame) -> DataFrame:
         """localCheckpoint in local mode; reliable store write on clusters
-        (same rationale as IncrementalKGPipeline._pin)."""
+        (same rationale as KGPipeline._pin)."""
         if self.spark.sparkContext.master.startswith("local"):
             return df.localCheckpoint()
         return self.store.stage(name, lambda: df)

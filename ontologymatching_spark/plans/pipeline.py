@@ -2,23 +2,44 @@
 OAEI2011Matcher.java:203-232, re-expressed as checkpointed DataFrame stages):
 
   src_files → extract(triples, entities) → prepare(norm tiers, virtual docs)
-    → block(candidate_pairs) → BSM + PSM + VMM → combine → select 1-1
-    → connected components → nodes/edges
+    → block(candidate_pairs) → BSM + PSM + VMM → combine → [DSI | IISM]
+    → select 1-1 → canonicalize → nodes / mentions / links / edges
 
 Every stage checkpoints through CheckpointStore (resume-from-snapshot), and
 every row carries lineage (repo, path, commit, content_sha256 + stage name).
+
+The same stage graph builds a KG from scratch and updates one: an update
+runs against the previous snapshot's store and its output equals a
+from-scratch build of the new corpus (tested). It reuses only what is local
+to a file or to a pair:
+
+  - extraction is per file: triples/entities of files whose (repo, path,
+    content_sha256) lineage is unchanged are carried over, and only the
+    diff is parsed;
+  - entity features (norm tiers, stem, virtual doc = own + same-module
+    sibling + path tokens) are file-local: ``prepared`` rows of unchanged
+    files are carried over;
+  - BSM/PSM are pair-local: a candidate pair whose endpoints both come from
+    unchanged files keeps its previous sim_bsm/sim_psm.
+
+Everything global runs in full: blocking (per-key caps and rank-zip depend
+on global key counts), VMM (corpus-level IDF) and every stage from the
+structural boost on. A previous file that produced no entities and no
+triples has no lineage, so it is parsed again as new; it yields nothing, so
+the outputs are unaffected.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import blocking, components, matchers, selection
 from ..operators.extract import extract_entities, extract_triples
+from ..operators.linking import link_mentions, mentions_from_triples
 from .checkpoint import CheckpointStore
 
 
@@ -34,34 +55,24 @@ class PipelineConfig:
     # boosts (the OAEI GENERAL_PURPOSE shape, OAEI2011Matcher.java:209-231).
     structural_boost: bool | str = False
     dsi_mcp: float = 0.75
-    # submit independent stage chains (triples→mentions→links vs the
-    # matching chain) as concurrent Spark jobs. Stage outputs are
-    # byte-identical either way. Measured on the single-box sandbox this
-    # HURTS (local[32] 205s → 285s on 100k files): both chains are
-    # checkpoint-write-bound and interleaving them turns sequential writes
-    # into seek thrash on the one shared disk. On a real cluster, where
-    # chains land on different executors/disks, it overlaps genuinely
-    # independent I/O — hence a knob (KG_OVERLAP=1), default off.
-    # field(default_factory=...) so the env var is read at PipelineConfig()
-    # construction time, not at module import (a bench harness may import
-    # first and set KG_OVERLAP later)
-    overlap_stages: bool = field(
-        default_factory=lambda: os.environ.get("KG_OVERLAP", "0") == "1"
-    )
 
 
 # Bump when extraction/matcher/selection SEMANTICS change (anything that
-# would make previously checkpointed stage rows non-reusable). The
-# incremental pipeline refuses to reuse a store with a different fingerprint.
+# would make previously checkpointed stage rows non-reusable). An update
+# refuses to reuse a store with a different fingerprint.
 PIPELINE_CODE_VERSION = "r5"
+
+LINEAGE = ["repo", "path", "content_sha256"]
+# the previous snapshot's stages an update reads
+REUSED_STAGES = ("triples", "entities", "prepared", "scored_pairs")
 
 
 def config_fingerprint(cfg: "PipelineConfig") -> str:
     """sha256 over the result-affecting config fields + the code version —
-    recorded in the store by ``KGPipeline.run`` and compared by
-    ``IncrementalKGPipeline`` before reusing any checkpointed stage
-    (ADVICE r04: a prev run produced by different matcher code/config would
-    silently void the bit-identical rebuild invariant)."""
+    recorded in the store by ``KGPipeline.run`` and compared before an
+    update reuses any checkpointed stage (a previous run produced by
+    different matcher code/config would silently void the bit-identical
+    rebuild invariant)."""
     import hashlib
     import json
 
@@ -84,9 +95,7 @@ def combine_scores(pf: DataFrame, cfg: "PipelineConfig") -> DataFrame:
     """(src_id, dst_id, src_uri, dst_uri, sim_bsm, sim_psm, sim_vmm) →
     + combined ``sim`` rounded to 12 decimals (TF-IDF partial-sum order
     varies with partitioning by ~1 ULP; rounding makes selection tie-breaks
-    bit-stable across parallelism levels, SURVEY.md §4(d)). Module-level so
-    the incremental pipeline combines reused and fresh scores through the
-    identical transformation."""
+    bit-stable across parallelism levels, SURVEY.md §4(d))."""
     sim_cols = ["sim_bsm", "sim_psm", "sim_vmm"]
     if cfg.combination == "max":
         pf = matchers.lwc_max(pf, sim_cols)
@@ -140,8 +149,7 @@ def apply_structural_boost(scored: DataFrame, triples: DataFrame,
                            prepared: DataFrame, src_e: DataFrame,
                            dst_e: DataFrame, cfg: "PipelineConfig") -> DataFrame:
     """Optional DSI / IISM refinement over the combined scores (SURVEY §7.9;
-    OAEI2011Matcher.java:209-231 GENERAL_PURPOSE shape). Module-level so the
-    incremental pipeline applies the identical transformation."""
+    OAEI2011Matcher.java:209-231 GENERAL_PURPOSE shape)."""
     from ..operators.iism import iism
     from ..operators.structural import dsi, parent_edges_from_triples
 
@@ -166,101 +174,138 @@ def apply_structural_boost(scored: DataFrame, triples: DataFrame,
     return scored.drop("sim").join(boosted, ["src_id", "dst_id"])
 
 
+def with_content_sha(src_files: DataFrame) -> DataFrame:
+    """Spark-side sha256 of ``content`` — bit-identical to the extractor's
+    hashlib digest (the repo's sha256 invariant test asserts F.sha2 ==
+    hashlib.sha256 hexdigest)."""
+    return src_files.withColumn("content_sha256", F.sha2(F.col("content"), 256))
+
+
+def prev_lineage(prev: CheckpointStore) -> DataFrame:
+    """Distinct (repo, path, content_sha256) the previous run observed —
+    union of the two extraction outputs' lineage columns."""
+    t = prev.read("triples").select(*LINEAGE)
+    e = prev.read("entities").select(*LINEAGE)
+    return t.unionByName(e).dropDuplicates(LINEAGE)
+
+
 class KGPipeline:
-    """Source half = repos where pmod(hash(repo),2)==0 is NOT used — the
-    split is explicit: callers pass a per-repo ``side`` column on
-    ``src_files`` or it is derived from the repo name (even/odd org index,
-    matching corpus/generator.py); see ``assign_side``."""
+    """Builds the KG of ``src_files`` into ``store``. With ``prev``, the
+    store of the previous snapshot, the run is an update: triples, entities
+    and prepared rows of files whose lineage is unchanged, and BSM/PSM
+    scores of candidate pairs with no changed endpoint, are read from
+    ``prev``; only the changed files are parsed and only the remaining
+    pairs scored. Blocking, VMM and the tail run in full, so the output
+    equals a build from scratch. ``store`` must then be a fresh store (the
+    previous snapshot stays intact as the rollback point), and ``__init__``
+    refuses a ``prev`` that lacks a reused stage or was written under a
+    different code/config fingerprint. The src/dst split is a per-repo
+    ``side`` column on ``src_files`` or the generator's repo naming (see
+    ``assign_side``)."""
 
     def __init__(self, spark: SparkSession, store: CheckpointStore,
-                 config: PipelineConfig | None = None):
+                 config: PipelineConfig | None = None,
+                 prev: CheckpointStore | None = None):
         self.spark = spark
         self.store = store
         self.cfg = config or PipelineConfig()
+        self.prev = prev
+        # reuse counts of the last update run with ``with_stats``
+        self.last_stats: dict | None = None
+        if prev is None:
+            return
+        missing = [s for s in REUSED_STAGES if not prev.is_complete(s)]
+        if missing:
+            raise ValueError(
+                f"previous store is incomplete — missing stages {missing}; "
+                "an update needs a finished KGPipeline run"
+            )
+        meta = prev.read_meta("pipeline")
+        if meta is None or meta.get("fingerprint") != config_fingerprint(
+            self.cfg
+        ):
+            raise ValueError(
+                "previous store has no/mismatched code-config fingerprint — "
+                "its checkpointed scores may come from different matcher "
+                "semantics; rebuild it"
+            )
 
-    # -- stages --------------------------------------------------------------
+    def _pin(self, name: str, df: DataFrame) -> DataFrame:
+        """Pin a small derived frame that several stages re-read. Local
+        mode: ``localCheckpoint`` (single JVM, executor loss is process
+        death anyway). Cluster: write through the checkpoint store, since
+        localCheckpoint is lost with its executor."""
+        if self.spark.sparkContext.master.startswith("local"):
+            return df.localCheckpoint()
+        return self.store.stage(name, lambda: df)
 
-    def run(self, src_files: DataFrame) -> dict[str, DataFrame]:
-        self._ex = None
+    def run(self, src_files: DataFrame,
+            with_stats: bool = True) -> dict[str, DataFrame]:
+        """Runs (or resumes) every stage and returns them by name. On an
+        update, ``with_stats`` puts the reuse counts on ``last_stats`` at
+        the price of one grouped count job."""
+        cfg = self.cfg
+        st = self.store
+        prev = self.prev
         # fingerprint first, before any stage commits: a store is only ever
         # reusable together with the code/config that produced it — a resume
         # against a store written under different semantics must fail fast,
         # not silently mix stages
-        fp = config_fingerprint(self.cfg)
-        old = self.store.read_meta("pipeline")
+        fp = config_fingerprint(cfg)
+        old = st.read_meta("pipeline")
         if old is not None and old.get("fingerprint") != fp:
             raise ValueError(
                 "checkpoint store was written with a different code/config "
                 "fingerprint; resume with the original config or use a "
                 "fresh store"
             )
-        self.store.write_meta("pipeline", {"fingerprint": fp})
-        try:
-            return self._run(src_files)
-        finally:
-            # drain in-flight side-chain futures even when the main chain
-            # raises (e.g. injected crash): completed stages stay committed,
-            # and callers never observe a half-written store
-            if self._ex is not None:
-                self._ex.shutdown(wait=True)
-                self._ex = None
+        st.write_meta("pipeline", {"fingerprint": fp})
 
-    def _run(self, src_files: DataFrame) -> dict[str, DataFrame]:
-        """Stage DAG has two independent chains off ``src_files``:
+        # the files to parse: all of them, or on an update only those whose
+        # path or content is new (files removed since fail the reuse
+        # semi-joins). Only the narrow lineage projection and the diff are
+        # pinned, never the corpus with its content.
+        parse = src_files
+        if prev is not None:
+            v2_full = with_content_sha(src_files)
+            v2 = self._pin("_v2_lineage", v2_full.select(*LINEAGE))
+            parse = self._pin(
+                "_changed_files",
+                v2_full.join(prev_lineage(prev), LINEAGE, "left_anti")
+                .drop("content_sha256"),
+            )
 
-          A: triples → mentions → links(needs prepared)
-          B: entities → prepared → candidate_pairs → scored → alignment → nodes
+        def carried(stage: str, fresh: DataFrame) -> DataFrame:
+            """``fresh`` plus, on an update, the previous rows of ``stage``
+            whose source file is unchanged (a shuffle semi-join on the
+            lineage key: both sides are corpus-sized)."""
+            if prev is None:
+                return fresh
+            reused = prev.read(stage).join(v2, LINEAGE, "left_semi")
+            return reused.unionByName(fresh.select(*reused.columns))
 
-        With ``overlap_stages`` they are submitted from two Python threads
-        (Spark schedules concurrent jobs at task granularity), so chain A's
-        shuffle/write-bound work fills cores while chain B's pandas-UDF
-        scoring runs — the local[32] win is ~the whole of chain A's wall.
-        """
-        from concurrent.futures import ThreadPoolExecutor
-
-        cfg = self.cfg
-        st = self.store
-
-        if not cfg.overlap_stages:
-            triples = st.stage("triples", lambda: extract_triples(src_files))
-            f_side = None
-        else:
-            self._ex = ex = ThreadPoolExecutor(max_workers=2)
-
-            def _side_chain():
-                t = st.stage("triples", lambda: extract_triples(src_files))
-                from ..operators.linking import mentions_from_triples
-
-                m = st.stage(
-                    "mentions", lambda: mentions_from_triples(t),
-                    inputs=["triples"],
-                )
-                return t, m
-
-            f_side = ex.submit(_side_chain)
-
-        entities_raw = st.stage("entities", lambda: extract_entities(src_files))
+        triples = st.stage(
+            "triples", lambda: carried("triples", extract_triples(parse))
+        )
+        entities_raw = st.stage(
+            "entities", lambda: carried("entities", extract_entities(parse))
+        )
 
         def _prepared():
-            e = matchers.prepare_entities(entities_raw)
-            return assign_side(matchers.with_virtual_doc(e), src_files)
+            raw = entities_raw
+            if prev is not None:
+                # the changed files' entities are already in the 'entities'
+                # stage: filter them back out rather than parse again.
+                # Virtual docs are file-local, so they see their full
+                # sibling set here.
+                raw = raw.join(
+                    F.broadcast(parse.select("repo", "path").dropDuplicates()),
+                    ["repo", "path"], "left_semi",
+                )
+            e = matchers.with_virtual_doc(matchers.prepare_entities(raw))
+            return carried("prepared", assign_side(e, parse))
 
         prepared = st.stage("prepared", _prepared, inputs=["entities"])
-
-        if f_side is not None:
-            # links needs (mentions, prepared) — both exist now or soon;
-            # overlaps with blocking + scoring below
-            def _links_chain():
-                _, m = f_side.result()
-                from ..operators.linking import link_mentions
-
-                lk = st.stage(
-                    "links", lambda: link_mentions(m, prepared),
-                    inputs=["mentions", "prepared"],
-                )
-                return lk
-
-            f_links = self._ex.submit(_links_chain)
 
         # matching is kind-gated like the reference (classes vs properties,
         # AbstractMatcher.java:147-189): modules are KG nodes and linking
@@ -275,24 +320,44 @@ class KGPipeline:
             inputs=["prepared"],
         )
 
+        ids = ["src_id", "dst_id"]
+
+        def _reusable_scores() -> DataFrame:
+            """Previous BSM/PSM rows still valid: the pair is a candidate
+            now and neither endpoint's file changed (the diff is the
+            broadcast side)."""
+            unchanged = prepared.join(
+                F.broadcast(parse.select("repo", "path")),
+                ["repo", "path"], "left_anti",
+            ).select("entity_id")
+            return (
+                prev.read("scored_pairs")
+                .select(*ids, "src_uri", "dst_uri", "sim_bsm", "sim_psm")
+                .join(pairs, ids, "left_semi")
+                .join(unchanged.withColumnRenamed("entity_id", "src_id"),
+                      "src_id", "left_semi")
+                .join(unchanged.withColumnRenamed("entity_id", "dst_id"),
+                      "dst_id", "left_semi")
+            )
+
         def _scored():
-            pf = matchers.pairs_with_features(pairs, src_e, dst_e)
-            pf = matchers.bsm(pf)
-            pf = matchers.psm(pf)
+            fresh = pairs
+            if prev is not None:
+                reusable = _reusable_scores()
+                fresh = pairs.join(reusable.select(*ids), ids, "left_anti")
+            pf = matchers.psm(matchers.bsm(
+                matchers.pairs_with_features(fresh, src_e, dst_e)
+            )).select(
+                *ids, F.col("s_uri").alias("src_uri"),
+                F.col("d_uri").alias("dst_uri"), "sim_bsm", "sim_psm",
+            )
+            if prev is not None:
+                pf = reusable.unionByName(pf)
             vm = matchers.vmm(pairs, src_e, dst_e)
-            pf = pf.join(vm, ["src_id", "dst_id"], "left").fillna(
-                {"sim_vmm": 0.0}
-            )
-            pf = pf.withColumn("src_uri", F.col("s_uri")).withColumn(
-                "dst_uri", F.col("d_uri")
-            )
+            pf = pf.join(vm, ids, "left").fillna({"sim_vmm": 0.0})
             return combine_scores(pf, cfg)
 
         scored = st.stage("scored_pairs", _scored, inputs=["candidate_pairs"])
-
-        if f_side is not None:
-            # side chain is done (or nearly) by the time scoring lands
-            triples, mentions = f_side.result()
 
         if cfg.structural_boost:
             scored = st.stage(
@@ -327,32 +392,25 @@ class KGPipeline:
 
         nodes = st.stage("nodes", _nodes, inputs=["alignment", "prepared"])
 
-        if f_side is None:
-
-            def _mentions():
-                from ..operators.linking import mentions_from_triples
-
-                return mentions_from_triples(triples)
-
-            mentions = st.stage("mentions", _mentions, inputs=["triples"])
-
-            def _links():
-                from ..operators.linking import link_mentions
-
-                return link_mentions(mentions, prepared)
-
-            links = st.stage("links", _links, inputs=["mentions", "prepared"])
-        else:
-            links = f_links.result()
+        mentions = st.stage(
+            "mentions", lambda: mentions_from_triples(triples),
+            inputs=["triples"],
+        )
+        links = st.stage(
+            "links", lambda: link_mentions(mentions, prepared),
+            inputs=["mentions", "prepared"],
+        )
 
         def _edges():
             # declares + resolved-import edges, re-keyed to canonical ids
             ent_map = nodes.select("uri", "canonical_id")
             src_map = ent_map.select(
-                F.col("uri").alias("subj"), F.col("canonical_id").alias("src_canonical")
+                F.col("uri").alias("subj"),
+                F.col("canonical_id").alias("src_canonical"),
             )
             dst_map = ent_map.select(
-                F.col("uri").alias("obj"), F.col("canonical_id").alias("dst_canonical")
+                F.col("uri").alias("obj"),
+                F.col("canonical_id").alias("dst_canonical"),
             )
             decl = (
                 triples.filter(F.col("pred") == "declares")
@@ -367,10 +425,7 @@ class KGPipeline:
             imp = (
                 mentions.join(links, "mention_id")
                 .join(ent_canon, "entity_id")
-                .join(
-                    src_map,
-                    F.col("context") == F.col("subj"),
-                )
+                .join(src_map, F.col("context") == F.col("subj"))
                 .select(
                     "src_canonical",
                     F.col("canonical_id").alias("dst_canonical"),
@@ -385,6 +440,28 @@ class KGPipeline:
             )
 
         edges = st.stage("edges", _edges, inputs=["nodes", "triples", "links"])
+
+        self.last_stats = None
+        if prev is not None and with_stats:
+            # one grouped count over the three frames, not a count each
+            parts = {"files": v2, "changed": parse,
+                     "reusable": _reusable_scores()}
+            tagged = [df.select(F.lit(k).alias("part"))
+                      for k, df in parts.items()]
+            n = dict(
+                reduce(DataFrame.unionByName, tagged)
+                .groupBy("part").count().collect()
+            )
+            n_pairs = st.rows("candidate_pairs")
+            self.last_stats = {
+                "n_files": n.get("files", 0),
+                "n_files_changed": n.get("changed", 0),
+                "n_pairs": n_pairs,
+                # pairs that could NOT reuse a previous BSM/PSM row — new
+                # pairs plus pairs with a changed endpoint (the reusable
+                # rows are a subset of the distinct candidate pairs)
+                "n_pairs_rescored": n_pairs - n.get("reusable", 0),
+            }
 
         return {
             "mentions": mentions,

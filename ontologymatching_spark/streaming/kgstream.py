@@ -8,8 +8,9 @@ rather than folding a delta. This module has no reference analog: it closes
 the loop between the repo's two streaming-era capabilities —
 
   * Structured Streaming ingest (streaming/ingest.py), and
-  * exact incremental snapshot re-matching (plans/incremental.py, whose
-    output is proven bit-identical to a from-scratch rebuild) —
+  * exact snapshot updates (``KGPipeline`` run against the previous
+    snapshot's store, plans/pipeline.py, whose output is proven
+    bit-identical to a from-scratch rebuild) —
 
 so a changing code corpus (commits arriving as file upserts/deletes) keeps
 a LIVE knowledge graph whose state after every microbatch equals the batch
@@ -36,9 +37,9 @@ Scale notes (100 TB story):
     ``MERGE``/row-level-delete commit (the checkpoint store already
     supports fmt="iceberg"), so the per-batch write cost is diff-sized,
     not corpus-sized.
-  * Re-matching cost per batch is the incremental plan's: re-parse +
-    re-score only what the file diff touches (pair-local reuse), global
-    stages recompute on alignment-sized inputs.
+  * Re-matching cost per batch is the update's: re-parse + re-score only
+    what the file diff touches (pair-local reuse), global stages recompute
+    on alignment-sized inputs.
   * Store retention is bounded (``retain``): the maintainer keeps the
     last N snapshot stores (the rollback window) and removes older ones.
 """
@@ -53,7 +54,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.checkpoint import CheckpointStore
-from ..plans.incremental import IncrementalKGPipeline
 from ..plans.pipeline import KGPipeline, PipelineConfig
 
 FILE_EVENT_SCHEMA = T.StructType(
@@ -90,8 +90,8 @@ def read_file_events(spark: SparkSession, src_dir: str,
 
 class StreamingKGMaintainer:
     """foreachBatch sink that folds each microbatch of file events into the
-    maintained corpus and re-matches it with IncrementalKGPipeline (first
-    batch: full KGPipeline bootstrap).
+    maintained corpus and re-matches it with ``KGPipeline`` against the
+    previous snapshot's store (first batch: a full build).
 
     After ``maintain()`` drains (availableNow), ``last_outputs`` holds the
     standard KGPipeline stage dict for the final corpus, ``corpus_path``
@@ -118,12 +118,13 @@ class StreamingKGMaintainer:
 
     def _recover(self) -> None:
         """Kill-and-restart resume: adopt the newest COMPLETE snapshot left
-        in work_dir (corpus written + every reused stage checkpointed), so
-        a restarted maintainer continues incrementally instead of
-        re-bootstrapping; the stream's own checkpoint (_stream_chk) makes
-        the source re-deliver only undrained drops."""
-        from ..plans.incremental import REUSED_STAGES
-
+        in work_dir (corpus written + ``edges``, the last stage, committed),
+        so a restarted maintainer continues incrementally instead of
+        re-bootstrapping, and expose it as ``last_outputs`` (every stage
+        resumes, so that run only reads). The stream's own checkpoint
+        (_stream_chk) makes the source re-deliver only undrained drops; a
+        batch that died half-way is redelivered and resumes its own
+        committed stages."""
         versions = sorted(
             int(d[len("store_v"):])
             for d in os.listdir(self.work_dir)
@@ -134,12 +135,13 @@ class StreamingKGMaintainer:
             store = CheckpointStore(
                 self.spark, os.path.join(self.work_dir, f"store_v{v:05d}")
             )
-            if os.path.exists(cpath) and all(
-                store.is_complete(s) for s in REUSED_STAGES
-            ):
+            if os.path.exists(cpath) and store.is_complete("edges"):
                 self.version = v
                 self.corpus_path = cpath
                 self.prev_store = store
+                self.last_outputs = KGPipeline(
+                    self.spark, store, self.cfg
+                ).run(self.spark.read.schema(CORPUS_SCHEMA).parquet(cpath))
                 break
 
     # -- per-batch fold + re-match -----------------------------------------
@@ -202,15 +204,8 @@ class StreamingKGMaintainer:
         store = CheckpointStore(
             spark, os.path.join(self.work_dir, f"store_v{self.version:05d}")
         )
-        stats = None
-        if self.prev_store is None:
-            out = KGPipeline(spark, store, self.cfg).run(corpus)
-        else:
-            pipe = IncrementalKGPipeline(
-                spark, self.prev_store, store, self.cfg
-            )
-            out = pipe.run(corpus, with_stats=self.with_stats)
-            stats = pipe.last_stats
+        pipe = KGPipeline(spark, store, self.cfg, prev=self.prev_store)
+        out = pipe.run(corpus, with_stats=self.with_stats)
         # every stage, the tail (alignment/edges) included, is committed by
         # st.stage before run() returns, so a crash between batches resumes
         # from a complete snapshot; the row counts come from the manifests
@@ -225,7 +220,7 @@ class StreamingKGMaintainer:
                 "n_files": n_files.get["n"],
                 "n_alignment": store.rows("alignment"),
                 "n_edges": store.rows("edges"),
-                "stats": stats,
+                "stats": pipe.last_stats,
                 "wall_s": round(time.time() - t0, 3),
             }
         )

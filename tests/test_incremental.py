@@ -1,6 +1,6 @@
-"""Incremental re-matching (plans/incremental.py): the hard invariant is
-REBUILD EQUALITY — running the incremental pipeline on corpus v2 against the
-v1 checkpoint store produces bit-identical outputs to a from-scratch
+"""Updates (``KGPipeline`` with ``prev``, plans/pipeline.py): the hard
+invariant is REBUILD EQUALITY — running the pipeline on corpus v2 against
+the v1 checkpoint store produces bit-identical outputs to a from-scratch
 KGPipeline run on v2 — while re-parsing only the changed files and
 re-scoring only pairs with a changed endpoint."""
 
@@ -13,52 +13,7 @@ from pyspark.sql import functions as F
 
 from ontologymatching_spark.corpus.generator import generate_corpus
 from ontologymatching_spark.plans.checkpoint import CheckpointStore
-from ontologymatching_spark.plans.incremental import (
-    IncrementalKGPipeline,
-    incremental_match,
-)
-from ontologymatching_spark.plans.pipeline import KGPipeline
-
-
-def test_incremental_match_completion_semantics(spark):
-    """Mode 1 (completion): prior pairs survive verbatim, delta matches are
-    added, result stays 1-1 and close to a full recompute."""
-    src_files, gold = generate_corpus(n_repos=16, files_per_repo=5, seed=11)
-    org = src_files.repo.str.extract(r"org(\d+)")[0].astype(int)
-    base_pd = src_files[org < 12]
-    delta_pd = src_files[org >= 12]
-
-    base = spark.createDataFrame(base_pd)
-    full = spark.createDataFrame(src_files)
-    delta = spark.createDataFrame(delta_pd)
-
-    prior = KGPipeline(
-        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_base_"))
-    ).run(base)["alignment"]
-
-    updated = incremental_match(spark, full, delta, prior).cache()
-
-    # (1) every prior pair survives
-    prior_pairs = {(r.src_uri, r.dst_uri) for r in prior.collect()}
-    updated_pairs = {(r.src_uri, r.dst_uri) for r in updated.collect()}
-    assert prior_pairs <= updated_pairs
-
-    # (2) updated stays 1-1
-    pdf = updated.toPandas()
-    assert pdf["src_id"].is_unique and pdf["dst_id"].is_unique
-
-    # (3) close to full recompute (completion semantics never re-litigates,
-    # and corpus-level IDF drifts, so exact equality is not expected)
-    full_align = KGPipeline(
-        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_full_"))
-    ).run(full)["alignment"]
-    full_pairs = {(r.src_uri, r.dst_uri) for r in full_align.collect()}
-    inter = len(updated_pairs & full_pairs)
-    union = len(updated_pairs | full_pairs)
-    assert inter / union >= 0.85, (inter, union)
-
-    # (4) delta-side matches were actually found (more pairs than prior)
-    assert len(updated_pairs) > len(prior_pairs)
+from ontologymatching_spark.plans.pipeline import KGPipeline, PipelineConfig
 
 
 def _rows(df, cols):
@@ -97,24 +52,51 @@ def _mutate(v1):
     return v2
 
 
+CONFIGS = {
+    "default": {},
+    "iism_lwc": {"structural_boost": "iism", "combination": "lwc"},
+}
+
+
 @pytest.fixture(scope="module")
-def corpora(spark):
-    v1, _ = generate_corpus(n_repos=8, files_per_repo=5, seed=11)
-    v2 = _mutate(v1)
-    store_v1 = CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_v1_"))
-    out_v1 = KGPipeline(spark, store_v1).run(spark.createDataFrame(v1))
-    out_v1["alignment"].count()  # materialize every stage
-    out_v1["edges"].count()
-    return v1, v2, store_v1, out_v1
+def v1_builds(spark):
+    """config name → (v1, v2, the v1 store and outputs, the config), each
+    built once per module."""
+    built = {}
+
+    def get(name):
+        if name not in built:
+            cfg = PipelineConfig(**CONFIGS[name])
+            v1, _ = generate_corpus(n_repos=8, files_per_repo=5, seed=11)
+            store_v1 = CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_v1_"))
+            out_v1 = KGPipeline(spark, store_v1, cfg).run(
+                spark.createDataFrame(v1)
+            )
+            out_v1["alignment"].count()  # materialize every stage
+            out_v1["edges"].count()
+            built[name] = v1, _mutate(v1), store_v1, out_v1, cfg
+        return built[name]
+
+    return get
 
 
+@pytest.fixture
+def corpora(v1_builds, request):
+    """The default config's build unless a test parametrizes the config
+    name (indirect)."""
+    return v1_builds(getattr(request, "param", "default"))
+
+
+@pytest.mark.parametrize("corpora", list(CONFIGS), indirect=True)
 def test_incremental_equals_full_rebuild(spark, corpora):
-    _, v2, store_v1, _ = corpora
+    _, v2, store_v1, _, cfg = corpora
     full = KGPipeline(
-        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_full_"))
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_full_")),
+        cfg,
     ).run(spark.createDataFrame(v2))
-    inc = IncrementalKGPipeline(
-        spark, store_v1, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_new_"))
+    inc = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_new_")),
+        cfg, prev=store_v1,
     ).run(spark.createDataFrame(v2))
 
     assert _rows(inc["scored_pairs"], SCORED_COLS) == _rows(
@@ -128,9 +110,10 @@ def test_incremental_equals_full_rebuild(spark, corpora):
 
 
 def test_incremental_rescores_only_the_diff(spark, corpora):
-    _, v2, store_v1, _ = corpora
-    pipe = IncrementalKGPipeline(
-        spark, store_v1, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_s_"))
+    _, v2, store_v1, _, _ = corpora
+    pipe = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_s_")),
+        prev=store_v1,
     )
     pipe.run(spark.createDataFrame(v2))
     s = pipe.last_stats
@@ -142,9 +125,10 @@ def test_incremental_rescores_only_the_diff(spark, corpora):
 
 
 def test_incremental_noop_corpus(spark, corpora):
-    v1, _, store_v1, out_v1 = corpora
-    pipe = IncrementalKGPipeline(
-        spark, store_v1, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_n_"))
+    v1, _, store_v1, out_v1, _ = corpora
+    pipe = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_n_")),
+        prev=store_v1,
     )
     inc = pipe.run(spark.createDataFrame(v1))
     assert pipe.last_stats["n_files_changed"] == 0
@@ -155,37 +139,30 @@ def test_incremental_noop_corpus(spark, corpora):
 
 
 def test_incremental_validates_prev_store(spark, corpora):
-    """ADVICE r04: an incomplete prev store or one written under different
-    matcher code/config must fail fast in __init__, not surface as an opaque
+    """An incomplete prev store or one written under different matcher
+    code/config must fail fast in __init__, not surface as an opaque
     mid-plan error or silently reuse stale scores."""
-    from ontologymatching_spark.plans.pipeline import PipelineConfig
-
-    _, _, store_v1, _ = corpora
+    _, _, store_v1, _, _ = corpora
     empty = CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_e_"))
     with pytest.raises(ValueError, match="incomplete"):
-        IncrementalKGPipeline(
-            spark, empty, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_e2_"))
+        KGPipeline(
+            spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_e2_")),
+            prev=empty,
         )
     with pytest.raises(ValueError, match="fingerprint"):
-        IncrementalKGPipeline(
-            spark, store_v1,
-            CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_e3_")),
-            config=PipelineConfig(threshold=0.7),
+        KGPipeline(
+            spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_e3_")),
+            config=PipelineConfig(threshold=0.7), prev=store_v1,
         )
-    # deliberate override stays available
-    IncrementalKGPipeline(
-        spark, store_v1,
-        CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_e4_")),
-        config=PipelineConfig(threshold=0.7), check_fingerprint=False,
-    )
 
 
 def test_incremental_lineage_survives(spark, corpora):
     """Every incremental nodes row still carries the sha256 of its v2
     source file (the per-row invariant from BASELINE.json's input_hint)."""
-    _, v2, store_v1, _ = corpora
-    inc = IncrementalKGPipeline(
-        spark, store_v1, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_l_"))
+    _, v2, store_v1, _, _ = corpora
+    inc = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_l_")),
+        prev=store_v1,
     ).run(spark.createDataFrame(v2))
     v2df = spark.createDataFrame(v2).withColumn(
         "sha", F.sha2(F.col("content"), 256)

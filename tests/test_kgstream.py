@@ -1,9 +1,10 @@
 """Streaming KG maintenance (streaming/kgstream.py): draining a stream of
 file upserts/tombstones leaves EXACTLY the batch KGPipeline's outputs for
-the folded corpus — the incremental plan's rebuild-equality invariant
-applied per microbatch — with pair-local reuse actually happening on delta
-batches, last-writer-wins within a batch, bounded store retention, and
-kill-and-restart recovery from the newest complete snapshot."""
+the folded corpus — the update's rebuild-equality invariant applied per
+microbatch — with pair-local reuse actually happening on delta batches,
+last-writer-wins within a batch, bounded store retention, kill-and-restart
+recovery from the newest complete snapshot, and a batch killed before any
+of its stages resuming to the same KG."""
 
 from __future__ import annotations
 
@@ -25,7 +26,14 @@ from ontologymatching_spark.streaming.kgstream import (
 )
 
 ALIGN_COLS = ["src_uri", "dst_uri", "sim"]
+NODE_COLS = ["canonical_id", "entity_id", "uri", "kind", "repo", "path",
+             "content_sha256"]
 EDGE_COLS = ["src_canonical", "dst_canonical", "pred", "repo", "path"]
+LIVE_COLS = {"alignment": ALIGN_COLS, "nodes": NODE_COLS, "edges": EDGE_COLS}
+# every stage a default-config batch commits, in commit order
+BATCH_STAGES = ["triples", "entities", "prepared", "candidate_pairs",
+                "scored_pairs", "alignment", "nodes", "mentions", "links",
+                "edges"]
 EVENT_COLS = ["repo", "path", "commit", "lang", "content", "deleted", "seq"]
 CORPUS_COLS = ["repo", "path", "commit", "lang", "content"]
 
@@ -141,6 +149,15 @@ def stream_run(spark):
     return v1, v2, v3, work, src, mt
 
 
+@pytest.fixture(scope="module")
+def rebuild_v3(spark, stream_run):
+    """From-scratch KGPipeline build of the stream's final corpus."""
+    v3 = stream_run[2]
+    return KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kgs_full_"))
+    ).run(spark.createDataFrame(v3))
+
+
 def test_stream_folds_to_final_corpus(spark, stream_run):
     _, _, v3, _, _, mt = stream_run
     assert [h["version"] for h in mt.history] == [0, 1, 2]
@@ -155,11 +172,9 @@ def test_stream_folds_to_final_corpus(spark, stream_run):
     assert last["n_edges"] == mt.last_outputs["edges"].count()
 
 
-def test_stream_equals_batch_rebuild(spark, stream_run):
-    _, _, v3, _, _, mt = stream_run
-    full = KGPipeline(
-        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kgs_full_"))
-    ).run(spark.createDataFrame(v3))
+def test_stream_equals_batch_rebuild(stream_run, rebuild_v3):
+    *_, mt = stream_run
+    full = rebuild_v3
     assert mt.history[-1]["n_alignment"] > 0  # equality is non-vacuous
     assert _rows(mt.last_outputs["alignment"], ALIGN_COLS) == _rows(
         full["alignment"], ALIGN_COLS
@@ -180,7 +195,7 @@ def test_stream_delta_batches_reuse(stream_run):
         assert s["n_pairs_rescored"] < s["n_pairs"]
 
 
-def test_stream_restart_recovers_and_continues(spark, stream_run):
+def test_stream_restart_recovers_and_continues(spark, stream_run, rebuild_v3):
     v1, _, v3, work, src, mt = stream_run
     # retention: with retain=2 after 3 batches, version 0 is pruned
     assert not os.path.exists(os.path.join(work, "store_v00000"))
@@ -190,6 +205,11 @@ def test_stream_restart_recovers_and_continues(spark, stream_run):
     # snapshot (version 2) instead of re-bootstrapping
     mt2 = StreamingKGMaintainer(spark, work, with_stats=True, retain=2)
     assert mt2.version == 2 and mt2.prev_store is not None
+    # ... and exposes that snapshot before any new batch arrives
+    for name, cols in (("alignment", ALIGN_COLS), ("edges", EDGE_COLS)):
+        assert _rows(mt2.last_outputs[name], cols) == _rows(
+            rebuild_v3[name], cols
+        ), name
 
     # one more drop: v4 rewrites one file; the stream checkpoint makes the
     # source deliver ONLY the new drop, and the recovered maintainer folds
@@ -271,3 +291,61 @@ def test_stream_equal_seq_commit_is_deterministic(spark):
         corpora.append(_rows(spark.read.parquet(mt.corpus_path), CORPUS_COLS))
     assert corpora[0] == corpora[1]
     assert len(corpora[0]) == len(v1)
+
+
+def _event_df(spark, events: pd.DataFrame):
+    return spark.createDataFrame(events[EVENT_COLS], schema=FILE_EVENT_SCHEMA)
+
+
+@pytest.fixture(scope="module")
+def bootstrapped(spark):
+    """A work dir holding one bootstrapped snapshot, the events of the next
+    batch, and the live-KG rows of a from-scratch build of the corpus that
+    batch folds to."""
+    v1, _ = generate_corpus(n_repos=6, files_per_repo=3, seed=37)
+    v2 = _mutate_a(v1)
+    work = tempfile.mkdtemp(prefix="kgkill_boot_")
+    StreamingKGMaintainer(spark, work).apply_batch(
+        _event_df(spark, _events(v1, None, seq0=0)), 0
+    )
+    full = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kgkill_full_"))
+    ).run(spark.createDataFrame(v2))
+    want = {name: _rows(full[name], cols) for name, cols in LIVE_COLS.items()}
+    assert want["alignment"]  # equality is non-vacuous
+    return work, _events(v2, v1, seq0=1000), want
+
+
+@pytest.mark.parametrize("stage", BATCH_STAGES)
+def test_batch_killed_before_stage_resumes(spark, bootstrapped, stage,
+                                           monkeypatch):
+    """Kill a batch before ``stage``, restart the maintainer on the same
+    work dir and redeliver the batch: the half-written snapshot is not
+    adopted, the redelivered batch resumes the stages committed before the
+    kill, and the live KG equals a from-scratch build."""
+    boot, batch, want = bootstrapped
+    work = os.path.join(tempfile.mkdtemp(prefix="kgkill_"), "work")
+    shutil.copytree(boot, work)
+    store = os.path.join(work, "store_v00001")
+
+    def manifests():
+        return {s: os.path.getmtime(os.path.join(store, f"{s}.manifest.json"))
+                for s in BATCH_STAGES
+                if os.path.exists(os.path.join(store, f"{s}.manifest.json"))}
+
+    mt = StreamingKGMaintainer(spark, work)
+    monkeypatch.setenv("KG_FAIL_BEFORE_STAGE", stage)
+    with pytest.raises(RuntimeError, match=f"before stage '{stage}'"):
+        mt.apply_batch(_event_df(spark, batch), 1)
+    monkeypatch.delenv("KG_FAIL_BEFORE_STAGE")
+    committed = manifests()
+    assert set(committed) == set(BATCH_STAGES[:BATCH_STAGES.index(stage)])
+
+    mt2 = StreamingKGMaintainer(spark, work)
+    assert mt2.version == 0
+    mt2.apply_batch(_event_df(spark, batch), 1)
+    assert mt2.version == 1
+    resumed = manifests()
+    assert all(resumed[s] == t for s, t in committed.items())
+    for name, cols in LIVE_COLS.items():
+        assert _rows(mt2.last_outputs[name], cols) == want[name], name

@@ -125,13 +125,6 @@ def test_topk_per_src(spark):
     assert sorted(out["dst_uri"]) == ["d3", "d4"]
 
 
-def test_completion_filter(spark):
-    pairs = _pairs(spark, [(1, 11, "a", "x", 0.9), (2, 12, "b", "y", 0.8)])
-    prior = _pairs(spark, [(1, 13, "a", "z", 1.0)])
-    out = selection.completion_filter(pairs, prior).toPandas()
-    assert list(out["src_uri"]) == ["b"]
-
-
 def test_best_match_boosting(spark):
     rows = [(1, 11, "a", "x", 0.5), (1, 12, "a", "y", 0.4)]
     out = (
