@@ -8,7 +8,7 @@ Usage:
   spark-submit --py-files dist/ontologymatching_spark.zip \
       jobs/run_stream.py \
       --events <dir of FILE_EVENT_SCHEMA parquet drops> \
-      --work <maintainer work dir (snapshots + stores + stream checkpoint)> \
+      --work <maintainer work dir (snapshot stores + stream checkpoint)> \
       [--threshold 0.6] [--structural-boost] [--max-files-per-trigger 1]
       [--follow]   # keep running instead of draining availableNow
 
@@ -51,7 +51,7 @@ def main() -> None:
     cfg = PipelineConfig(
         threshold=args.threshold, structural_boost=args.structural_boost
     )
-    mt = StreamingKGMaintainer(spark, args.work, config=cfg, with_stats=True)
+    mt = StreamingKGMaintainer(spark, args.work, config=cfg)
     stream = read_file_events(
         spark, args.events, max_files_per_trigger=args.max_files_per_trigger
     )
@@ -73,9 +73,7 @@ def main() -> None:
         if mt.last_outputs is not None:
             print(json.dumps({
                 "final_version": mt.version,
-                "corpus": mt.corpus_path,
-                "store": mt.prev_store.root
-                if hasattr(mt.prev_store, "root") else None,
+                "store": mt.prev_store.root,
             }))
 
 

@@ -103,13 +103,6 @@ class IncrementalDedupPlan:
 
     # -- shared helpers -----------------------------------------------------
 
-    def _pin(self, name: str, df: DataFrame) -> DataFrame:
-        """localCheckpoint in local mode; reliable store write on clusters
-        (same rationale as KGPipeline._pin)."""
-        if self.spark.sparkContext.master.startswith("local"):
-            return df.localCheckpoint()
-        return self.store.stage(name, lambda: df)
-
     def _require_prev(self, stages: list[str], meta_name: str,
                       params: dict) -> None:
         if self.prev is None:
@@ -175,8 +168,8 @@ class IncrementalDedupPlan:
         st.write_meta("dedup_minhash", _fingerprint(params))
 
         d = docs_v2.select("doc_id", F.col(text_col).alias("text"))
-        v2_lin = self._pin(
-            "_mh_v2_lineage", d.select("doc_id", _doc_lineage_col())
+        v2_lin = st.stage(
+            "_mh_v2_lineage", lambda: d.select("doc_id", _doc_lineage_col())
         )
 
         def _sigs():
@@ -198,7 +191,7 @@ class IncrementalDedupPlan:
 
         self.last_stats = None
         if with_stats:
-            n_docs = v2_lin.count()
+            n_docs = st.rows("_mh_v2_lineage")
             n_reused = prev.read("mh_sigs").join(
                 v2_lin, DOC_LINEAGE, "left_semi"
             ).count()
@@ -272,13 +265,14 @@ class IncrementalDedupPlan:
         )
         st, prev = self.store, self.prev
 
-        v2_lin = self._pin(
-            "_ivf_v2_lineage", vectors_v2.select("vec_id", _vec_lineage_col())
+        v2_lin = st.stage(
+            "_ivf_v2_lineage",
+            lambda: vectors_v2.select("vec_id", _vec_lineage_col()),
         )
         prev_lin = prev.read("ivf_assign").select(*VEC_LINEAGE).dropDuplicates(
             VEC_LINEAGE
         )
-        n_total = v2_lin.count()
+        n_total = st.rows("_ivf_v2_lineage")
         n_changed = v2_lin.join(prev_lin, VEC_LINEAGE, "left_anti").count()
         rebuild = n_total == 0 or (n_changed / n_total) >= rebuild_frac
 

@@ -32,9 +32,8 @@ the outputs are unaffected.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import blocking, components, matchers, selection
@@ -196,12 +195,19 @@ class KGPipeline:
     scores of candidate pairs with no changed endpoint, are read from
     ``prev``; only the changed files are parsed and only the remaining
     pairs scored. Blocking, VMM and the tail run in full, so the output
-    equals a build from scratch. ``store`` must then be a fresh store (the
-    previous snapshot stays intact as the rollback point), and ``__init__``
-    refuses a ``prev`` that lacks a reused stage or was written under a
-    different code/config fingerprint. The src/dst split is a per-repo
-    ``side`` column on ``src_files`` or the generator's repo naming (see
-    ``assign_side``)."""
+    equals a build from scratch. ``store`` must then hold no pipeline stage
+    of another run (it may hold the corpus the run reads; the previous
+    snapshot stays intact as the rollback point), and ``__init__`` refuses
+    a ``prev`` that lacks a reused stage or was written under a different
+    code/config fingerprint. The src/dst split is a per-repo ``side``
+    column on ``src_files`` or the generator's repo naming (see
+    ``assign_side``).
+
+    After an update, ``last_stats`` holds its reuse counts: files, changed
+    files and candidate pairs from the stage manifests, rescored pairs from
+    an ``Observation`` on the write of ``scored_pairs``. It is None after a
+    build, and after an update that resumed ``scored_pairs`` from ``store``
+    instead of computing it (the observation then never ran)."""
 
     def __init__(self, spark: SparkSession, store: CheckpointStore,
                  config: PipelineConfig | None = None,
@@ -210,7 +216,7 @@ class KGPipeline:
         self.store = store
         self.cfg = config or PipelineConfig()
         self.prev = prev
-        # reuse counts of the last update run with ``with_stats``
+        # reuse counts of the last update (see the class docstring)
         self.last_stats: dict | None = None
         if prev is None:
             return
@@ -230,20 +236,8 @@ class KGPipeline:
                 "semantics; rebuild it"
             )
 
-    def _pin(self, name: str, df: DataFrame) -> DataFrame:
-        """Pin a small derived frame that several stages re-read. Local
-        mode: ``localCheckpoint`` (single JVM, executor loss is process
-        death anyway). Cluster: write through the checkpoint store, since
-        localCheckpoint is lost with its executor."""
-        if self.spark.sparkContext.master.startswith("local"):
-            return df.localCheckpoint()
-        return self.store.stage(name, lambda: df)
-
-    def run(self, src_files: DataFrame,
-            with_stats: bool = True) -> dict[str, DataFrame]:
-        """Runs (or resumes) every stage and returns them by name. On an
-        update, ``with_stats`` puts the reuse counts on ``last_stats`` at
-        the price of one grouped count job."""
+    def run(self, src_files: DataFrame) -> dict[str, DataFrame]:
+        """Runs (or resumes) every stage and returns them by name."""
         cfg = self.cfg
         st = self.store
         prev = self.prev
@@ -264,14 +258,14 @@ class KGPipeline:
         # the files to parse: all of them, or on an update only those whose
         # path or content is new (files removed since fail the reuse
         # semi-joins). Only the narrow lineage projection and the diff are
-        # pinned, never the corpus with its content.
+        # committed, never the corpus with its content.
         parse = src_files
         if prev is not None:
             v2_full = with_content_sha(src_files)
-            v2 = self._pin("_v2_lineage", v2_full.select(*LINEAGE))
-            parse = self._pin(
+            v2 = st.stage("_v2_lineage", lambda: v2_full.select(*LINEAGE))
+            parse = st.stage(
                 "_changed_files",
-                v2_full.join(prev_lineage(prev), LINEAGE, "left_anti")
+                lambda: v2_full.join(prev_lineage(prev), LINEAGE, "left_anti")
                 .drop("content_sha256"),
             )
 
@@ -321,29 +315,29 @@ class KGPipeline:
         )
 
         ids = ["src_id", "dst_id"]
-
-        def _reusable_scores() -> DataFrame:
-            """Previous BSM/PSM rows still valid: the pair is a candidate
-            now and neither endpoint's file changed (the diff is the
-            broadcast side)."""
-            unchanged = prepared.join(
-                F.broadcast(parse.select("repo", "path")),
-                ["repo", "path"], "left_anti",
-            ).select("entity_id")
-            return (
-                prev.read("scored_pairs")
-                .select(*ids, "src_uri", "dst_uri", "sim_bsm", "sim_psm")
-                .join(pairs, ids, "left_semi")
-                .join(unchanged.withColumnRenamed("entity_id", "src_id"),
-                      "src_id", "left_semi")
-                .join(unchanged.withColumnRenamed("entity_id", "dst_id"),
-                      "dst_id", "left_semi")
-            )
+        # counts the rescored pairs; attached only when scored_pairs is
+        # computed, not resumed
+        rescored: list[Observation] = []
 
         def _scored():
             fresh = pairs
             if prev is not None:
-                reusable = _reusable_scores()
+                # previous BSM/PSM rows still valid: the pair is a candidate
+                # now and neither endpoint's file changed (the diff is the
+                # broadcast side)
+                unchanged = prepared.join(
+                    F.broadcast(parse.select("repo", "path")),
+                    ["repo", "path"], "left_anti",
+                ).select("entity_id")
+                reusable = (
+                    prev.read("scored_pairs")
+                    .select(*ids, "src_uri", "dst_uri", "sim_bsm", "sim_psm")
+                    .join(pairs, ids, "left_semi")
+                    .join(unchanged.withColumnRenamed("entity_id", "src_id"),
+                          "src_id", "left_semi")
+                    .join(unchanged.withColumnRenamed("entity_id", "dst_id"),
+                          "dst_id", "left_semi")
+                )
                 fresh = pairs.join(reusable.select(*ids), ids, "left_anti")
             pf = matchers.psm(matchers.bsm(
                 matchers.pairs_with_features(fresh, src_e, dst_e)
@@ -352,7 +346,13 @@ class KGPipeline:
                 F.col("d_uri").alias("dst_uri"), "sim_bsm", "sim_psm",
             )
             if prev is not None:
-                pf = reusable.unionByName(pf)
+                # one row per fresh pair. AQE drops an input of a join it
+                # finds empty together with any metrics inside it; an
+                # observation directly under the union survives that
+                rescored.append(Observation("rescored_pairs"))
+                pf = reusable.unionByName(pf.observe(
+                    rescored[0], F.count(F.lit(1)).alias("n")
+                ))
             vm = matchers.vmm(pairs, src_e, dst_e)
             pf = pf.join(vm, ids, "left").fillna({"sim_vmm": 0.0})
             return combine_scores(pf, cfg)
@@ -442,25 +442,14 @@ class KGPipeline:
         edges = st.stage("edges", _edges, inputs=["nodes", "triples", "links"])
 
         self.last_stats = None
-        if prev is not None and with_stats:
-            # one grouped count over the three frames, not a count each
-            parts = {"files": v2, "changed": parse,
-                     "reusable": _reusable_scores()}
-            tagged = [df.select(F.lit(k).alias("part"))
-                      for k, df in parts.items()]
-            n = dict(
-                reduce(DataFrame.unionByName, tagged)
-                .groupBy("part").count().collect()
-            )
-            n_pairs = st.rows("candidate_pairs")
+        if rescored:
             self.last_stats = {
-                "n_files": n.get("files", 0),
-                "n_files_changed": n.get("changed", 0),
-                "n_pairs": n_pairs,
+                "n_files": st.rows("_v2_lineage"),
+                "n_files_changed": st.rows("_changed_files"),
+                "n_pairs": st.rows("candidate_pairs"),
                 # pairs that could NOT reuse a previous BSM/PSM row — new
-                # pairs plus pairs with a changed endpoint (the reusable
-                # rows are a subset of the distinct candidate pairs)
-                "n_pairs_rescored": n_pairs - n.get("reusable", 0),
+                # pairs plus pairs with a changed endpoint
+                "n_pairs_rescored": rescored[0].get["n"],
             }
 
         return {

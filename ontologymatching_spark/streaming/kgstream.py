@@ -1,5 +1,5 @@
 """Continuous KG maintenance: a stream of file upserts/tombstones drives
-exact incremental re-matching, one corpus snapshot per microbatch.
+exact incremental re-matching, one snapshot store per microbatch.
 
 The reference is batch-only — every invocation re-runs the full cartesian
 matcher (AbstractMatcher.java:519-678); its only reuse hook reloads a WHOLE
@@ -40,6 +40,9 @@ Scale notes (100 TB story):
   * Re-matching cost per batch is the update's: re-parse + re-score only
     what the file diff touches (pair-local reuse), global stages recompute
     on alignment-sized inputs.
+  * Each version is one ``CheckpointStore``: the folded corpus commits as
+    its ``corpus`` stage, then every pipeline stage as its own, so a kill
+    at any stage boundary resumes from the last committed stage.
   * Store retention is bounded (``retain``): the maintainer keeps the
     last N snapshot stores (the rollback window) and removes older ones.
 """
@@ -49,7 +52,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -69,10 +72,6 @@ FILE_EVENT_SCHEMA = T.StructType(
 )
 
 CORPUS_COLS = ["repo", "path", "commit", "lang", "content"]
-# the columns of a corpus snapshot, read back without schema inference
-CORPUS_SCHEMA = T.StructType(
-    [f for f in FILE_EVENT_SCHEMA.fields if f.name in CORPUS_COLS]
-)
 
 
 def read_file_events(spark: SparkSession, src_dir: str,
@@ -94,54 +93,50 @@ class StreamingKGMaintainer:
     previous snapshot's store (first batch: a full build).
 
     After ``maintain()`` drains (availableNow), ``last_outputs`` holds the
-    standard KGPipeline stage dict for the final corpus, ``corpus_path``
-    the corpus snapshot it was built from, and ``history`` one record per
-    batch (version, row counts, incremental-reuse stats when enabled).
-    Invariant (tested): ``last_outputs`` is bit-identical to a from-scratch
-    ``KGPipeline.run`` on the same final corpus."""
+    standard KGPipeline stage dict for the final corpus, ``prev_store`` the
+    snapshot store it was built in (its ``corpus`` stage is the folded
+    corpus), and ``history`` one record per batch (version, row counts, the
+    update's reuse stats). Invariant (tested): ``last_outputs`` is
+    bit-identical to a from-scratch ``KGPipeline.run`` on the same final
+    corpus."""
 
     def __init__(self, spark: SparkSession, work_dir: str,
-                 config: PipelineConfig | None = None,
-                 with_stats: bool = False, retain: int = 2):
+                 config: PipelineConfig | None = None, retain: int = 2):
         self.spark = spark
         self.work_dir = work_dir
         self.cfg = config or PipelineConfig()
-        self.with_stats = with_stats
         self.retain = max(2, retain)
         self.version = -1
         self.prev_store: CheckpointStore | None = None
-        self.corpus_path: str | None = None
         self.last_outputs: dict[str, DataFrame] | None = None
         self.history: list[dict] = []
         os.makedirs(work_dir, exist_ok=True)
         self._recover()
 
+    def _store_path(self, version: int) -> str:
+        return os.path.join(self.work_dir, f"store_v{version:05d}")
+
     def _recover(self) -> None:
         """Kill-and-restart resume: adopt the newest COMPLETE snapshot left
-        in work_dir (corpus written + ``edges``, the last stage, committed),
-        so a restarted maintainer continues incrementally instead of
-        re-bootstrapping, and expose it as ``last_outputs`` (every stage
-        resumes, so that run only reads). The stream's own checkpoint
-        (_stream_chk) makes the source re-deliver only undrained drops; a
-        batch that died half-way is redelivered and resumes its own
-        committed stages."""
+        in work_dir (``edges``, the last stage, committed), so a restarted
+        maintainer continues incrementally instead of re-bootstrapping, and
+        expose it as ``last_outputs`` (every stage resumes, so that run
+        only reads). The stream's own checkpoint (_stream_chk) makes the
+        source re-deliver only undrained drops; a batch that died half-way
+        is redelivered and resumes its own committed stages."""
         versions = sorted(
             int(d[len("store_v"):])
             for d in os.listdir(self.work_dir)
             if d.startswith("store_v")
         )
         for v in reversed(versions):
-            cpath = os.path.join(self.work_dir, f"corpus_v{v:05d}")
-            store = CheckpointStore(
-                self.spark, os.path.join(self.work_dir, f"store_v{v:05d}")
-            )
-            if os.path.exists(cpath) and store.is_complete("edges"):
+            store = CheckpointStore(self.spark, self._store_path(v))
+            if store.is_complete("edges"):
                 self.version = v
-                self.corpus_path = cpath
                 self.prev_store = store
                 self.last_outputs = KGPipeline(
                     self.spark, store, self.cfg
-                ).run(self.spark.read.schema(CORPUS_SCHEMA).parquet(cpath))
+                ).run(store.read("corpus"))
                 break
 
     # -- per-batch fold + re-match -----------------------------------------
@@ -173,51 +168,51 @@ class StreamingKGMaintainer:
             ~F.coalesce(F.col("deleted"), F.lit(False))
         ).select(*CORPUS_COLS)
         keys = latest.select("repo", "path")
+        prev = self.prev_store
 
-        if self.corpus_path is None:
-            new_corpus = upserts
-        else:
-            prev_corpus = spark.read.schema(CORPUS_SCHEMA).parquet(
-                self.corpus_path
-            )
-            # batch side is diff-sized: broadcast it into the anti-join so
-            # the corpus side never shuffles (on a cluster this fold is one
-            # Iceberg MERGE commit instead of a parquet rewrite)
-            new_corpus = prev_corpus.join(
-                F.broadcast(keys), ["repo", "path"], "left_anti"
-            ).unionByName(upserts)
+        def _fold():
+            from ..partitions import fan_parts
 
-        self.version += 1
-        cpath = os.path.join(self.work_dir, f"corpus_v{self.version:05d}")
-        # multi-file snapshot: the source's partitioning would otherwise be
-        # preserved (a single-file bootstrap drop → a single part file →
-        # every downstream pipeline read scans the corpus as ONE split, the
-        # round-3 single-file trap — ADVICE r05)
-        from ..partitions import fan_parts
+            if prev is None:
+                new_corpus = upserts
+            else:
+                # batch side is diff-sized: broadcast it into the anti-join
+                # so the corpus side never shuffles (on a cluster this fold
+                # is one Iceberg MERGE commit instead of a parquet rewrite)
+                new_corpus = prev.read("corpus").join(
+                    F.broadcast(keys), ["repo", "path"], "left_anti"
+                ).unionByName(upserts)
+            # multi-file snapshot: the source's partitioning would otherwise
+            # be preserved (a single-file bootstrap drop → a single part
+            # file → every downstream pipeline read scans the corpus as ONE
+            # split, the round-3 single-file trap — ADVICE r05)
+            return new_corpus.repartition(min(fan_parts(new_corpus), 64))
 
-        n_files = Observation("corpus")
-        new_corpus.repartition(min(fan_parts(new_corpus), 64)).observe(
-            n_files, F.count(F.lit(1)).alias("n")
-        ).write.mode("overwrite").parquet(cpath)
-        corpus = spark.read.schema(CORPUS_SCHEMA).parquet(cpath)
-
-        store = CheckpointStore(
-            spark, os.path.join(self.work_dir, f"store_v{self.version:05d}")
-        )
-        pipe = KGPipeline(spark, store, self.cfg, prev=self.prev_store)
-        out = pipe.run(corpus, with_stats=self.with_stats)
+        version = self.version + 1
+        root = self._store_path(version)
+        store = CheckpointStore(spark, root)
+        # a half-written store of this version resumes only for the batch
+        # that wrote it (a foreachBatch redelivery keeps its id); any other
+        # batch starts it empty rather than mix in that batch's stages
+        if (store.read_meta("batch") or {}).get("batch_id") != batch_id:
+            shutil.rmtree(root)
+            store = CheckpointStore(spark, root)
+            store.write_meta("batch", {"batch_id": batch_id})
+        corpus = store.stage("corpus", _fold)
+        pipe = KGPipeline(spark, store, self.cfg, prev=prev)
+        out = pipe.run(corpus)
         # every stage, the tail (alignment/edges) included, is committed by
         # st.stage before run() returns, so a crash between batches resumes
         # from a complete snapshot; the row counts come from the manifests
 
-        self.corpus_path = cpath
+        self.version = version
         self.prev_store = store
         self.last_outputs = out
         self.history.append(
             {
                 "batch_id": batch_id,
-                "version": self.version,
-                "n_files": n_files.get["n"],
+                "version": version,
+                "n_files": store.rows("corpus"),
                 "n_alignment": store.rows("alignment"),
                 "n_edges": store.rows("edges"),
                 "stats": pipe.last_stats,
@@ -227,15 +222,11 @@ class StreamingKGMaintainer:
         self._prune()
 
     def _prune(self) -> None:
-        """Keep the last ``retain`` snapshot stores + corpora (the rollback
-        window); the stream's total disk use stays bounded regardless of
-        how many batches have run."""
-        floor = self.version - self.retain
-        for v in range(floor + 1):
-            for prefix in ("store_v", "corpus_v"):
-                p = os.path.join(self.work_dir, f"{prefix}{v:05d}")
-                if os.path.exists(p):
-                    shutil.rmtree(p, ignore_errors=True)
+        """Keep the last ``retain`` snapshot stores (the rollback window);
+        the stream's total disk use stays bounded regardless of how many
+        batches have run."""
+        for v in range(self.version - self.retain + 1):
+            shutil.rmtree(self._store_path(v), ignore_errors=True)
 
     # -- drive ---------------------------------------------------------------
 

@@ -110,18 +110,39 @@ def test_incremental_equals_full_rebuild(spark, corpora):
 
 
 def test_incremental_rescores_only_the_diff(spark, corpora):
-    _, v2, store_v1, _, _ = corpora
+    v1, v2, store_v1, _, _ = corpora
     pipe = KGPipeline(
         spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_s_")),
         prev=store_v1,
     )
-    pipe.run(spark.createDataFrame(v2))
+    out = pipe.run(spark.createDataFrame(v2))
     s = pipe.last_stats
     # 3 touched files (2 rewrites + 1 added); the removed file is not in v2
     assert s["n_files_changed"] == 3
     assert s["n_files"] == len(v2)
     # the overwhelming majority of pairs reuse their previous BSM/PSM rows
     assert 0 < s["n_pairs_rescored"] < s["n_pairs"] / 2
+
+    # counted independently: v2's candidate pairs minus those in v1's
+    # scored_pairs whose two endpoints both come from unchanged files
+    m = v2.merge(v1[["repo", "path", "content"]], how="left", indicator=True)
+    changed = spark.createDataFrame(
+        m.loc[m["_merge"] == "left_only", ["repo", "path"]]
+    )
+    assert changed.count() == 3
+    moved = out["entities"].join(changed, ["repo", "path"], "left_semi")
+    ids = ["src_id", "dst_id"]
+    reused = (
+        out["candidate_pairs"].select(*ids)
+        .join(store_v1.read("scored_pairs").select(*ids), ids, "left_semi")
+        .join(moved.select(F.col("entity_id").alias("src_id")), "src_id",
+              "left_anti")
+        .join(moved.select(F.col("entity_id").alias("dst_id")), "dst_id",
+              "left_anti")
+    )
+    n_pairs = out["candidate_pairs"].count()
+    assert s["n_pairs"] == n_pairs
+    assert s["n_pairs_rescored"] == n_pairs - reused.count()
 
 
 def test_incremental_noop_corpus(spark, corpora):

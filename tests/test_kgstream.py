@@ -3,8 +3,9 @@ file upserts/tombstones leaves EXACTLY the batch KGPipeline's outputs for
 the folded corpus — the update's rebuild-equality invariant applied per
 microbatch — with pair-local reuse actually happening on delta batches,
 last-writer-wins within a batch, bounded store retention, kill-and-restart
-recovery from the newest complete snapshot, and a batch killed before any
-of its stages resuming to the same KG."""
+recovery from the newest complete snapshot, a batch killed before any
+of its stages resuming to the same KG, and a different batch never
+resuming that half-written snapshot."""
 
 from __future__ import annotations
 
@@ -30,10 +31,10 @@ NODE_COLS = ["canonical_id", "entity_id", "uri", "kind", "repo", "path",
              "content_sha256"]
 EDGE_COLS = ["src_canonical", "dst_canonical", "pred", "repo", "path"]
 LIVE_COLS = {"alignment": ALIGN_COLS, "nodes": NODE_COLS, "edges": EDGE_COLS}
-# every stage a default-config batch commits, in commit order
-BATCH_STAGES = ["triples", "entities", "prepared", "candidate_pairs",
-                "scored_pairs", "alignment", "nodes", "mentions", "links",
-                "edges"]
+# every stage a default-config update batch commits, in commit order
+BATCH_STAGES = ["corpus", "_v2_lineage", "_changed_files", "triples",
+                "entities", "prepared", "candidate_pairs", "scored_pairs",
+                "alignment", "nodes", "mentions", "links", "edges"]
 EVENT_COLS = ["repo", "path", "commit", "lang", "content", "deleted", "seq"]
 CORPUS_COLS = ["repo", "path", "commit", "lang", "content"]
 
@@ -144,7 +145,7 @@ def stream_run(spark):
     _write_drop(spark, e2, src, "01_v2.parquet")
     _write_drop(spark, e3, src, "02_v3.parquet")
 
-    mt = StreamingKGMaintainer(spark, work, with_stats=True, retain=2)
+    mt = StreamingKGMaintainer(spark, work, retain=2)
     mt.maintain(read_file_events(spark, src))
     return v1, v2, v3, work, src, mt
 
@@ -161,11 +162,11 @@ def rebuild_v3(spark, stream_run):
 def test_stream_folds_to_final_corpus(spark, stream_run):
     _, _, v3, _, _, mt = stream_run
     assert [h["version"] for h in mt.history] == [0, 1, 2]
-    got = spark.read.parquet(mt.corpus_path)
+    got = mt.prev_store.read("corpus")
     want = spark.createDataFrame(v3[CORPUS_COLS])
     assert _rows(got, CORPUS_COLS) == _rows(want, CORPUS_COLS)
-    # the history's counts come from the write observation and the stage
-    # manifests, not from count jobs: they must still be the row counts
+    # the history's counts come from the stage manifests, not from count
+    # jobs: they must still be the row counts
     last = mt.history[-1]
     assert last["n_files"] == len(v3)
     assert last["n_alignment"] == mt.last_outputs["alignment"].count()
@@ -203,7 +204,7 @@ def test_stream_restart_recovers_and_continues(spark, stream_run, rebuild_v3):
 
     # a NEW maintainer on the same work_dir adopts the newest complete
     # snapshot (version 2) instead of re-bootstrapping
-    mt2 = StreamingKGMaintainer(spark, work, with_stats=True, retain=2)
+    mt2 = StreamingKGMaintainer(spark, work, retain=2)
     assert mt2.version == 2 and mt2.prev_store is not None
     # ... and exposes that snapshot before any new batch arrives
     for name, cols in (("alignment", ALIGN_COLS), ("edges", EDGE_COLS)):
@@ -245,12 +246,12 @@ def test_stream_tombstone_only_batch(spark):
     _write_drop(spark, _events(v1, None, seq0=0), src, "00_v1.parquet")
     _write_drop(spark, _events(v2, v1, seq0=1000), src, "01_del.parquet")
 
-    mt = StreamingKGMaintainer(spark, work, with_stats=True)
+    mt = StreamingKGMaintainer(spark, work)
     mt.maintain(read_file_events(spark, src))
 
     assert [h["version"] for h in mt.history] == [0, 1]
     assert mt.history[1]["stats"]["n_files_changed"] == 0  # pure deletion
-    got = spark.read.parquet(mt.corpus_path)
+    got = mt.prev_store.read("corpus")
     assert _rows(got, CORPUS_COLS) == _rows(
         spark.createDataFrame(v2[CORPUS_COLS]), CORPUS_COLS
     )
@@ -288,7 +289,7 @@ def test_stream_equal_seq_commit_is_deterministic(spark):
             spark.createDataFrame(batch[EVENT_COLS], schema=FILE_EVENT_SCHEMA),
             0,
         )
-        corpora.append(_rows(spark.read.parquet(mt.corpus_path), CORPUS_COLS))
+        corpora.append(_rows(mt.prev_store.read("corpus"), CORPUS_COLS))
     assert corpora[0] == corpora[1]
     assert len(corpora[0]) == len(v1)
 
@@ -297,23 +298,35 @@ def _event_df(spark, events: pd.DataFrame):
     return spark.createDataFrame(events[EVENT_COLS], schema=FILE_EVENT_SCHEMA)
 
 
+def _live_rows(spark, corpus: pd.DataFrame) -> dict:
+    """The live-KG rows of a from-scratch build of ``corpus``."""
+    full = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kgkill_full_"))
+    ).run(spark.createDataFrame(corpus))
+    want = {name: _rows(full[name], cols) for name, cols in LIVE_COLS.items()}
+    assert want["alignment"]  # equality is non-vacuous
+    return want
+
+
+def _manifests(store: str) -> dict:
+    """{stage: manifest mtime} of the BATCH_STAGES committed in ``store``."""
+    return {s: os.path.getmtime(os.path.join(store, f"{s}.manifest.json"))
+            for s in BATCH_STAGES
+            if os.path.exists(os.path.join(store, f"{s}.manifest.json"))}
+
+
 @pytest.fixture(scope="module")
 def bootstrapped(spark):
     """A work dir holding one bootstrapped snapshot, the events of the next
-    batch, and the live-KG rows of a from-scratch build of the corpus that
-    batch folds to."""
+    batch, the live-KG rows of a from-scratch build of the corpus that
+    batch folds to, and the bootstrapped corpus."""
     v1, _ = generate_corpus(n_repos=6, files_per_repo=3, seed=37)
     v2 = _mutate_a(v1)
     work = tempfile.mkdtemp(prefix="kgkill_boot_")
     StreamingKGMaintainer(spark, work).apply_batch(
         _event_df(spark, _events(v1, None, seq0=0)), 0
     )
-    full = KGPipeline(
-        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kgkill_full_"))
-    ).run(spark.createDataFrame(v2))
-    want = {name: _rows(full[name], cols) for name, cols in LIVE_COLS.items()}
-    assert want["alignment"]  # equality is non-vacuous
-    return work, _events(v2, v1, seq0=1000), want
+    return work, _events(v2, v1, seq0=1000), _live_rows(spark, v2), v1
 
 
 @pytest.mark.parametrize("stage", BATCH_STAGES)
@@ -323,29 +336,72 @@ def test_batch_killed_before_stage_resumes(spark, bootstrapped, stage,
     work dir and redeliver the batch: the half-written snapshot is not
     adopted, the redelivered batch resumes the stages committed before the
     kill, and the live KG equals a from-scratch build."""
-    boot, batch, want = bootstrapped
+    boot, batch, want, _ = bootstrapped
     work = os.path.join(tempfile.mkdtemp(prefix="kgkill_"), "work")
     shutil.copytree(boot, work)
     store = os.path.join(work, "store_v00001")
-
-    def manifests():
-        return {s: os.path.getmtime(os.path.join(store, f"{s}.manifest.json"))
-                for s in BATCH_STAGES
-                if os.path.exists(os.path.join(store, f"{s}.manifest.json"))}
 
     mt = StreamingKGMaintainer(spark, work)
     monkeypatch.setenv("KG_FAIL_BEFORE_STAGE", stage)
     with pytest.raises(RuntimeError, match=f"before stage '{stage}'"):
         mt.apply_batch(_event_df(spark, batch), 1)
     monkeypatch.delenv("KG_FAIL_BEFORE_STAGE")
-    committed = manifests()
+    committed = _manifests(store)
     assert set(committed) == set(BATCH_STAGES[:BATCH_STAGES.index(stage)])
 
     mt2 = StreamingKGMaintainer(spark, work)
     assert mt2.version == 0
     mt2.apply_batch(_event_df(spark, batch), 1)
     assert mt2.version == 1
-    resumed = manifests()
+    resumed = _manifests(store)
     assert all(resumed[s] == t for s, t in committed.items())
     for name, cols in LIVE_COLS.items():
         assert _rows(mt2.last_outputs[name], cols) == want[name], name
+    # the reuse counts are observed on the scored_pairs write, so a batch
+    # that resumed that stage has none
+    assert (mt2.history[-1]["stats"] is None) == ("scored_pairs" in committed)
+
+
+def test_other_batch_does_not_resume_half_written_snapshot(
+        spark, bootstrapped, monkeypatch):
+    """Batch 1 dies before ``prepared`` with its corpus, pins, triples and
+    entities committed. After a restart, a DIFFERENT batch 2 lands at the
+    same version: it must start that snapshot empty, so the live KG equals
+    a from-scratch build of batch 2's fold, with batch 1's rows nowhere."""
+    boot, batch1, _, v1 = bootstrapped
+    work = os.path.join(tempfile.mkdtemp(prefix="kgother_"), "work")
+    shutil.copytree(boot, work)
+    store = os.path.join(work, "store_v00001")
+
+    monkeypatch.setenv("KG_FAIL_BEFORE_STAGE", "prepared")
+    with pytest.raises(RuntimeError, match="before stage 'prepared'"):
+        StreamingKGMaintainer(spark, work).apply_batch(
+            _event_df(spark, batch1), 1
+        )
+    monkeypatch.delenv("KG_FAIL_BEFORE_STAGE")
+    assert set(_manifests(store)) == {
+        "corpus", "_v2_lineage", "_changed_files", "triples", "entities"
+    }
+
+    # batch 2: rename a class in a dst-side file, add one file
+    v2 = v1.copy()
+    i = v2.index[v2.repo.str.startswith("org0003")][0]
+    v2.loc[i, "content"] = v2.loc[i, "content"].replace(
+        "class", "class Other", 1
+    )
+    new_row = v1.iloc[0].copy()
+    new_row["path"] = "src/new/otheradd000.scala"
+    new_row["content"] = "class OtherAddedHelper {\n}\n"
+    v2.loc[len(v2)] = new_row
+
+    mt = StreamingKGMaintainer(spark, work)
+    assert mt.version == 0
+    mt.apply_batch(_event_df(spark, _events(v2, v1, seq0=1000)), 2)
+    assert mt.version == 1
+    assert mt.history[-1]["stats"]["n_files_changed"] == 2
+    assert _rows(mt.prev_store.read("corpus"), CORPUS_COLS) == _rows(
+        spark.createDataFrame(v2[CORPUS_COLS]), CORPUS_COLS
+    )
+    want = _live_rows(spark, v2)
+    for name, cols in LIVE_COLS.items():
+        assert _rows(mt.last_outputs[name], cols) == want[name], name

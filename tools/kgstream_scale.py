@@ -75,7 +75,7 @@ def main(n_files: int, n_batches: int, diff_files: int) -> None:
                              (b + 1) * 10_000_000 + len(delta))
         _write_drop(spark, delta[cols], src, f"{b + 1:02d}_delta.parquet")
 
-    mt = StreamingKGMaintainer(spark, work, with_stats=True)
+    mt = StreamingKGMaintainer(spark, work)
     s0 = _read_steal_jiffies()
     t0 = time.time()
     mt.maintain(read_file_events(spark, src))
