@@ -3,11 +3,12 @@ ontology scan (`ontologyParser/OntoTreeBuilder.java:165-253,339-460`: parse a
 document, walk declarations, build Node lists + edges).
 
 One pure-Python per-file grammar (`parse_file`) is shared by:
-  - the Spark path: ``extract_triples`` / ``extract_entities`` via
-    ``mapInPandas`` (batched Arrow UDTF — one file row in, many rows out,
-    SURVEY.md §2.9), and
+  - the Spark path: ``extract_triples`` via ``mapInPandas`` (batched Arrow
+    UDTF — one file row in, many rows out, SURVEY.md §2.9), whose output
+    ``entities_from_triples`` projects to the entity table, and
   - the single-node oracle (oracle/matcher_oracle.py),
-so both sides see byte-identical entities.
+so both sides see byte-identical entities. Like the reference, each file
+is parsed once and both its nodes and its edges come from that parse.
 
 Lineage: every emitted row carries (repo, path, commit, content_sha256) — the
 per-row invariant required by BASELINE.json `input_hint` (sha256(content)
@@ -131,20 +132,7 @@ TRIPLE_SCHEMA = StructType(
     ]
 )
 
-ENTITY_SCHEMA = StructType(
-    [
-        StructField("uri", StringType()),
-        StructField("local_name", StringType()),
-        StructField("kind", StringType()),
-        StructField("repo", StringType()),
-        StructField("path", StringType()),
-        StructField("commit", StringType()),
-        StructField("content_sha256", StringType()),
-    ]
-)
-
 _TRIPLE_COLS = [f.name for f in TRIPLE_SCHEMA.fields]
-_ENTITY_COLS = [f.name for f in ENTITY_SCHEMA.fields]
 
 
 def extract_triples(src_files: DataFrame) -> DataFrame:
@@ -164,56 +152,22 @@ def extract_triples(src_files: DataFrame) -> DataFrame:
     )
 
 
-def extract_entities(src_files: DataFrame) -> DataFrame:
-    """src_files → entities(uri, local_name, kind, lineage…)."""
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for r in pdf.itertuples(index=False):
-                parsed = parse_file(r.repo, r.path, r.commit, r.lang, r.content)
-                lineage = {
-                    "repo": r.repo,
-                    "path": r.path,
-                    "commit": r.commit,
-                    "content_sha256": parsed["sha"],
-                }
-                rows.append(
-                    {
-                        "uri": module_uri(r.repo, r.path),
-                        "local_name": module_name(r.path),
-                        "kind": "module",
-                        **lineage,
-                    }
-                )
-                for e in parsed["entities"]:
-                    rows.append(
-                        {
-                            "uri": entity_uri(r.repo, r.path, e["kind"], e["name"]),
-                            "local_name": e["name"],
-                            "kind": e["kind"],
-                            **lineage,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=_ENTITY_COLS)
-
-    return src_files.select("repo", "path", "commit", "lang", "content").mapInPandas(
-        emit, schema=ENTITY_SCHEMA
-    )
-
-
 def entities_from_triples(triples: DataFrame) -> DataFrame:
-    """Alternative derivation: rebuild the entities table from the triples
-    table (pure DataFrame ops) — used to cross-check the extractor."""
-    names = triples.filter(F.col("pred") == "hasName").select(
-        F.col("subj").alias("uri"),
-        F.col("obj").alias("local_name"),
-        "repo", "path", "commit", "content_sha256",
+    """triples → entities(uri, local_name, kind, lineage…): one row per
+    module and per declared entity, each subject's hasName paired with its
+    hasKind. The pairing groups on the lineage too, so a name and a kind
+    meet only within the file that emitted them. One aggregation is
+    cheaper here than a names ⋈ kinds self-join: one shuffle, not two
+    scans and a join."""
+    lineage = ["repo", "path", "commit", "content_sha256"]
+    pred, obj = F.col("pred"), F.col("obj")
+    return (
+        triples.filter(pred.isin("hasName", "hasKind"))
+        .groupBy(F.col("subj").alias("uri"), *lineage)
+        .agg(F.max(F.when(pred == "hasName", obj)).alias("local_name"),
+             F.max(F.when(pred == "hasKind", obj)).alias("kind"))
+        .select("uri", "local_name", "kind", *lineage)
     )
-    kinds = triples.filter(F.col("pred") == "hasKind").select(
-        F.col("subj").alias("uri"), F.col("obj").alias("kind")
-    )
-    return names.join(kinds, "uri")
 
 
 def with_entity_ids(entities: DataFrame) -> DataFrame:

@@ -38,7 +38,7 @@ themselves cite their sources in operators/dedup.py and operators/ann.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import components
@@ -90,15 +90,16 @@ class IncrementalDedupPlan:
     snapshots. ``full_*`` builds a store from scratch (the bootstrap AND
     the rebuild comparator); ``run_*`` reuses a previous snapshot's store.
     Reuse stats land on ``self.last_stats`` (dict), never in the returned
-    stage mapping — same contract as ``KGPipeline`` with ``prev``."""
+    stage mapping — same contract as ``KGPipeline`` with ``prev``: they
+    come from stage manifests and from an ``Observation`` on the write of
+    ``mh_sigs``, so they cost no extra job, and ``run_minhash`` leaves
+    them None when it resumes ``mh_sigs`` instead of computing it."""
 
     def __init__(self, spark: SparkSession, store: CheckpointStore,
-                 prev_store: CheckpointStore | None = None,
-                 check_fingerprint: bool = True):
+                 prev_store: CheckpointStore | None = None):
         self.spark = spark
         self.store = store
         self.prev = prev_store
-        self.check_fingerprint = check_fingerprint
         self.last_stats: dict | None = None
 
     # -- shared helpers -----------------------------------------------------
@@ -112,16 +113,14 @@ class IncrementalDedupPlan:
             raise ValueError(
                 f"previous store is incomplete — missing stages {missing}"
             )
-        if self.check_fingerprint:
-            meta = self.prev.read_meta(meta_name)
-            want = _fingerprint(params)
-            if meta != want:
-                raise ValueError(
-                    f"previous store {meta_name} fingerprint mismatch "
-                    f"({meta} != {want}) — signatures/assignments from "
-                    "different parameters are not reusable; rebuild, or "
-                    "pass check_fingerprint=False"
-                )
+        meta = self.prev.read_meta(meta_name)
+        want = _fingerprint(params)
+        if meta != want:
+            raise ValueError(
+                f"previous store {meta_name} fingerprint mismatch "
+                f"({meta} != {want}) — signatures/assignments from "
+                "different parameters are not reusable; rebuild"
+            )
 
     # -- MinHash dedup ------------------------------------------------------
 
@@ -160,8 +159,7 @@ class IncrementalDedupPlan:
         return self._minhash_tail(sigs, est_min)
 
     def run_minhash(self, docs_v2: DataFrame, text_col: str = "text",
-                    est_min: float = 0.75,
-                    with_stats: bool = True) -> dict[str, DataFrame]:
+                    est_min: float = 0.75) -> dict[str, DataFrame]:
         params = {**self._MH_PARAMS, "est_min": est_min}
         self._require_prev(["mh_sigs"], "dedup_minhash", params)
         st, prev = self.store, self.prev
@@ -171,6 +169,9 @@ class IncrementalDedupPlan:
         v2_lin = st.stage(
             "_mh_v2_lineage", lambda: d.select("doc_id", _doc_lineage_col())
         )
+        # counts the reused signatures; attached only when mh_sigs is
+        # computed, not resumed
+        reused_obs: list[Observation] = []
 
         def _sigs():
             prev_sigs = prev.read("mh_sigs")
@@ -184,17 +185,20 @@ class IncrementalDedupPlan:
                 "doc_id", "left_semi",
             )
             fresh = minhash_sigs_with_lineage(changed, "text")
-            return reused.unionByName(fresh.select(*reused.columns))
+            # directly under the union: AQE drops an observation inside a
+            # join input it finds empty, but not one here
+            reused_obs.append(Observation("mh_sigs_reused"))
+            return reused.observe(
+                reused_obs[0], F.count(F.lit(1)).alias("n")
+            ).unionByName(fresh.select(*reused.columns))
 
         sigs = st.stage("mh_sigs", _sigs)
         out = self._minhash_tail(sigs, est_min)
 
         self.last_stats = None
-        if with_stats:
+        if reused_obs:
             n_docs = st.rows("_mh_v2_lineage")
-            n_reused = prev.read("mh_sigs").join(
-                v2_lin, DOC_LINEAGE, "left_semi"
-            ).count()
+            n_reused = reused_obs[0].get["n"]
             self.last_stats = {
                 "n_docs": n_docs,
                 "n_sigs_reused": n_reused,
@@ -250,8 +254,7 @@ class IncrementalDedupPlan:
     def run_ivf(self, vectors_v2: DataFrame, k: int = 10,
                 n_centroids: int = 8, nprobe: int = 2, n_iter: int = 3,
                 sample: int = 128, grid_bits: int = 20, n_salt: int = 8,
-                rebuild_frac: float = 0.5,
-                with_stats: bool = True) -> dict[str, DataFrame]:
+                rebuild_frac: float = 0.5) -> dict[str, DataFrame]:
         """Diff fraction ≥ ``rebuild_frac`` → full retrain (bit-identical to
         ``full_ivf`` on v2). Below it the previous centroids are kept:
         unchanged vectors reuse their assignment rows bit-exactly, the diff
@@ -272,8 +275,15 @@ class IncrementalDedupPlan:
         prev_lin = prev.read("ivf_assign").select(*VEC_LINEAGE).dropDuplicates(
             VEC_LINEAGE
         )
+        # vectors whose (vec_id, emb_sha256) is new: committed once, read
+        # for the count (from the manifest) and for the re-assignment
+        changed_lin = st.stage(
+            "_ivf_changed",
+            lambda: v2_lin.join(prev_lin, VEC_LINEAGE, "left_anti"),
+            inputs=["_ivf_v2_lineage"],
+        )
         n_total = st.rows("_ivf_v2_lineage")
-        n_changed = v2_lin.join(prev_lin, VEC_LINEAGE, "left_anti").count()
+        n_changed = st.rows("_ivf_changed")
         rebuild = n_total == 0 or (n_changed / n_total) >= rebuild_frac
 
         if rebuild:
@@ -293,9 +303,7 @@ class IncrementalDedupPlan:
                     v2_lin, VEC_LINEAGE, "left_semi"
                 )
                 changed = vectors_v2.join(
-                    v2_lin.join(prev_lin, VEC_LINEAGE, "left_anti")
-                    .select("vec_id"),
-                    "vec_id", "left_semi",
+                    changed_lin.select("vec_id"), "vec_id", "left_semi"
                 )
                 lin = changed.select("vec_id", _vec_lineage_col())
                 fresh = ivf_assign(
@@ -311,12 +319,10 @@ class IncrementalDedupPlan:
                 "ivf_topk": self._ivf_tail(vectors_v2, assign, k, n_salt),
             }
 
-        self.last_stats = None
-        if with_stats:
-            self.last_stats = {
-                "n_vectors": n_total,
-                "n_vectors_changed": n_changed,
-                "index_rebuilt": rebuild,
-                "n_assign_reused": 0 if rebuild else n_total - n_changed,
-            }
+        self.last_stats = {
+            "n_vectors": n_total,
+            "n_vectors_changed": n_changed,
+            "index_rebuilt": rebuild,
+            "n_assign_reused": 0 if rebuild else n_total - n_changed,
+        }
         return out

@@ -1,9 +1,14 @@
 """End-to-end KG-construction pipeline (the OAEI2011 ensemble shape,
 OAEI2011Matcher.java:203-232, re-expressed as checkpointed DataFrame stages):
 
-  src_files → extract(triples, entities) → prepare(norm tiers, virtual docs)
-    → block(candidate_pairs) → BSM + PSM + VMM → combine → [DSI | IISM]
-    → select 1-1 → canonicalize → nodes / mentions / links / edges
+  src_files → extract(triples) → prepare(entities of the triples, norm
+    tiers, virtual docs) → block(candidate_pairs) → BSM + PSM + VMM
+    → combine → [DSI | IISM] → select 1-1 → canonicalize → nodes
+    → links(mentions of the triples) → edges
+
+Each file is parsed once: ``triples`` is the only extraction output, and
+entities and mentions are projections of it computed inside the stages
+that read them.
 
 Every stage checkpoints through CheckpointStore (resume-from-snapshot), and
 every row carries lineage (repo, path, commit, content_sha256 + stage name).
@@ -13,7 +18,7 @@ runs against the previous snapshot's store and its output equals a
 from-scratch build of the new corpus (tested). It reuses only what is local
 to a file or to a pair:
 
-  - extraction is per file: triples/entities of files whose (repo, path,
+  - extraction is per file: triples of files whose (repo, path,
     content_sha256) lineage is unchanged are carried over, and only the
     diff is parsed;
   - entity features (norm tiers, stem, virtual doc = own + same-module
@@ -24,9 +29,7 @@ to a file or to a pair:
 
 Everything global runs in full: blocking (per-key caps and rank-zip depend
 on global key counts), VMM (corpus-level IDF) and every stage from the
-structural boost on. A previous file that produced no entities and no
-triples has no lineage, so it is parsed again as new; it yields nothing, so
-the outputs are unaffected.
+structural boost on.
 """
 
 from __future__ import annotations
@@ -37,7 +40,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import blocking, components, matchers, selection
-from ..operators.extract import extract_entities, extract_triples
+from ..operators.extract import entities_from_triples, extract_triples
 from ..operators.linking import link_mentions, mentions_from_triples
 from .checkpoint import CheckpointStore
 
@@ -63,7 +66,7 @@ PIPELINE_CODE_VERSION = "r5"
 
 LINEAGE = ["repo", "path", "content_sha256"]
 # the previous snapshot's stages an update reads
-REUSED_STAGES = ("triples", "entities", "prepared", "scored_pairs")
+REUSED_STAGES = ("triples", "prepared", "scored_pairs")
 
 
 def config_fingerprint(cfg: "PipelineConfig") -> str:
@@ -181,17 +184,16 @@ def with_content_sha(src_files: DataFrame) -> DataFrame:
 
 
 def prev_lineage(prev: CheckpointStore) -> DataFrame:
-    """Distinct (repo, path, content_sha256) the previous run observed —
-    union of the two extraction outputs' lineage columns."""
-    t = prev.read("triples").select(*LINEAGE)
-    e = prev.read("entities").select(*LINEAGE)
-    return t.unionByName(e).dropDuplicates(LINEAGE)
+    """Distinct (repo, path, content_sha256) the previous run observed.
+    Every parsed file emits its module's hasName/hasKind triples, so
+    ``triples`` carries the lineage of every file."""
+    return prev.read("triples").select(*LINEAGE).dropDuplicates(LINEAGE)
 
 
 class KGPipeline:
     """Builds the KG of ``src_files`` into ``store``. With ``prev``, the
-    store of the previous snapshot, the run is an update: triples, entities
-    and prepared rows of files whose lineage is unchanged, and BSM/PSM
+    store of the previous snapshot, the run is an update: triples and
+    prepared rows of files whose lineage is unchanged, and BSM/PSM
     scores of candidate pairs with no changed endpoint, are read from
     ``prev``; only the changed files are parsed and only the remaining
     pairs scored. Blocking, VMM and the tail run in full, so the output
@@ -281,25 +283,24 @@ class KGPipeline:
         triples = st.stage(
             "triples", lambda: carried("triples", extract_triples(parse))
         )
-        entities_raw = st.stage(
-            "entities", lambda: carried("entities", extract_entities(parse))
-        )
 
         def _prepared():
-            raw = entities_raw
+            t = triples
             if prev is not None:
-                # the changed files' entities are already in the 'entities'
+                # the changed files' triples are already in the 'triples'
                 # stage: filter them back out rather than parse again.
                 # Virtual docs are file-local, so they see their full
                 # sibling set here.
-                raw = raw.join(
+                t = t.join(
                     F.broadcast(parse.select("repo", "path").dropDuplicates()),
                     ["repo", "path"], "left_semi",
                 )
-            e = matchers.with_virtual_doc(matchers.prepare_entities(raw))
+            e = matchers.with_virtual_doc(
+                matchers.prepare_entities(entities_from_triples(t))
+            )
             return carried("prepared", assign_side(e, parse))
 
-        prepared = st.stage("prepared", _prepared, inputs=["entities"])
+        prepared = st.stage("prepared", _prepared, inputs=["triples"])
 
         # matching is kind-gated like the reference (classes vs properties,
         # AbstractMatcher.java:147-189): modules are KG nodes and linking
@@ -392,13 +393,11 @@ class KGPipeline:
 
         nodes = st.stage("nodes", _nodes, inputs=["alignment", "prepared"])
 
-        mentions = st.stage(
-            "mentions", lambda: mentions_from_triples(triples),
-            inputs=["triples"],
-        )
+        # not committed: a filter over the committed triples
+        mentions = mentions_from_triples(triples)
         links = st.stage(
             "links", lambda: link_mentions(mentions, prepared),
-            inputs=["mentions", "prepared"],
+            inputs=["triples", "prepared"],
         )
 
         def _edges():

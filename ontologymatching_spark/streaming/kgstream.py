@@ -30,13 +30,12 @@ order is the stream's arrival order, as with any log-structured source.
 
 Scale notes (100 TB story):
 
-  * The fold (prev corpus ∖ batch keys ∪ batch upserts) is a shuffle
-    anti-join keyed on (repo, path) — the batch side is diff-sized and
-    broadcastable; only the corpus rewrite is corpus-sized. Locally it is
-    a parquet rewrite; on a cluster the same fold is ONE Iceberg
-    ``MERGE``/row-level-delete commit (the checkpoint store already
-    supports fmt="iceberg"), so the per-batch write cost is diff-sized,
-    not corpus-sized.
+  * The fold (prev corpus ∖ batch keys ∪ batch upserts) is an anti-join
+    keyed on (repo, path) with the diff-sized batch side broadcast, so the
+    corpus side does not shuffle. It commits as the ``corpus`` stage of
+    the version's store, which writes the whole folded corpus: a parquet
+    overwrite locally, ``createOrReplace`` of the stage table with
+    fmt="iceberg". The per-batch write is therefore corpus-sized.
   * Re-matching cost per batch is the update's: re-parse + re-score only
     what the file diff touches (pair-local reuse), global stages recompute
     on alignment-sized inputs.
@@ -177,8 +176,7 @@ class StreamingKGMaintainer:
                 new_corpus = upserts
             else:
                 # batch side is diff-sized: broadcast it into the anti-join
-                # so the corpus side never shuffles (on a cluster this fold
-                # is one Iceberg MERGE commit instead of a parquet rewrite)
+                # so the corpus side never shuffles
                 new_corpus = prev.read("corpus").join(
                     F.broadcast(keys), ["repo", "path"], "left_anti"
                 ).unionByName(upserts)

@@ -3,6 +3,7 @@
 
 import hashlib
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from ontologymatching_spark.operators import extract
@@ -13,6 +14,31 @@ JAVA = (
     "public static void doThing() {\n}\n"
 )
 SCALA = "import os\nclass FooBar {\n}\ndef doThing(): Unit = {}\n"
+XML = (
+    '<module name="mod9">\n'
+    '  <import module="other.mod"/>\n'
+    '  <class name="FooBar"/>\n'
+    '  <function name="do_thing"/>\n'
+    "</module>\n"
+)
+ENTITY_COLS = ["uri", "local_name", "kind", "repo", "path", "commit",
+               "content_sha256"]
+
+
+def _entities_py(src_files: pd.DataFrame) -> list[tuple]:
+    """The entity table straight from ``parse_file``: one module row per
+    file plus one row per declaration, with the file's lineage."""
+    rows = []
+    for r in src_files.itertuples(index=False):
+        parsed = extract.parse_file(r.repo, r.path, r.commit, r.lang, r.content)
+        lineage = (r.repo, r.path, r.commit, parsed["sha"])
+        rows.append((extract.module_uri(r.repo, r.path),
+                     extract.module_name(r.path), "module", *lineage))
+        for e in parsed["entities"]:
+            rows.append((extract.entity_uri(r.repo, r.path, e["kind"],
+                                            e["name"]),
+                         e["name"], e["kind"], *lineage))
+    return sorted(rows)
 
 
 def test_parse_file_langs():
@@ -47,33 +73,47 @@ def test_sha256_invariant(spark, small_corpus):
     source row, checked in Spark itself (F.sha2 vs hashlib in mapInPandas)."""
     src_files, _ = small_corpus
     sf = spark.createDataFrame(src_files)
-    ents = extract.extract_entities(sf)
+    triples = extract.extract_triples(sf)
     src_sha = sf.select(
         "repo", "path", F.sha2(F.col("content"), 256).alias("expected_sha")
     )
-    bad = (
-        ents.join(src_sha, ["repo", "path"])
-        .filter(F.col("content_sha256") != F.col("expected_sha"))
-        .count()
-    )
-    assert bad == 0
+    joined = triples.join(src_sha, ["repo", "path"])
+    assert joined.count() == triples.count() > 0
+    assert joined.filter(
+        F.col("content_sha256") != F.col("expected_sha")
+    ).count() == 0
 
 
 def test_entities_from_triples_crosscheck(spark, small_corpus):
+    """The entity table the pipeline derives from the triples equals the
+    one ``parse_file`` gives directly, on all seven columns, for the
+    generator corpus plus a module with no declarations and an xml file."""
     src_files, _ = small_corpus
-    sf = spark.createDataFrame(src_files)
-    e1 = extract.extract_entities(sf).select("uri", "local_name", "kind")
-    e2 = extract.entities_from_triples(extract.extract_triples(sf)).select(
-        "uri", "local_name", "kind"
+    extra = pd.DataFrame([
+        {"repo": "org0000/x", "path": "src/empty/bare.py", "commit": "c0",
+         "lang": "python", "content": "import os\n\n"},
+        {"repo": "org0001/x", "path": "onto/mod9.xml", "commit": "c1",
+         "lang": "xml", "content": XML},
+    ])
+    files = pd.concat([src_files[extra.columns], extra], ignore_index=True)
+    derived = extract.entities_from_triples(
+        extract.extract_triples(spark.createDataFrame(files))
     )
-    assert e1.exceptAll(e2).count() == 0
-    assert e2.exceptAll(e1).count() == 0
+    assert derived.columns == ENTITY_COLS
+    want = _entities_py(files)
+    assert sorted(map(tuple, derived.collect())) == want
+    assert ("org0000/x/src/empty/bare.py", "bare", "module", "org0000/x",
+            "src/empty/bare.py", "c0",
+            hashlib.sha256(b"import os\n\n").hexdigest()) in want
+    assert len([r for r in want if r[4] == "onto/mod9.xml"]) == 3
 
 
 def test_entity_ids_stable(spark, small_corpus):
     src_files, _ = small_corpus
     sf = spark.createDataFrame(src_files)
-    e = extract.with_entity_ids(extract.extract_entities(sf))
+    e = extract.with_entity_ids(
+        extract.entities_from_triples(extract.extract_triples(sf))
+    )
     # deterministic: same uri → same id on recompute; ids unique per uri
     pdf = e.select("uri", "entity_id").toPandas()
     assert pdf.groupby("uri")["entity_id"].nunique().max() == 1
@@ -81,14 +121,7 @@ def test_entity_ids_stable(spark, small_corpus):
 
 
 def test_parse_xml_grammar():
-    xml = (
-        '<module name="mod9">\n'
-        '  <import module="other.mod"/>\n'
-        '  <class name="FooBar"/>\n'
-        '  <function name="do_thing"/>\n'
-        "</module>\n"
-    )
-    parsed = extract.parse_file("r", "p.xml", "c", "xml", xml)
+    parsed = extract.parse_file("r", "p.xml", "c", "xml", XML)
     kinds = sorted(e["kind"] for e in parsed["entities"])
     assert kinds == ["class", "function"]
     assert parsed["imports"] == ["other.mod"]

@@ -33,8 +33,8 @@ EDGE_COLS = ["src_canonical", "dst_canonical", "pred", "repo", "path"]
 LIVE_COLS = {"alignment": ALIGN_COLS, "nodes": NODE_COLS, "edges": EDGE_COLS}
 # every stage a default-config update batch commits, in commit order
 BATCH_STAGES = ["corpus", "_v2_lineage", "_changed_files", "triples",
-                "entities", "prepared", "candidate_pairs", "scored_pairs",
-                "alignment", "nodes", "mentions", "links", "edges"]
+                "prepared", "candidate_pairs", "scored_pairs", "alignment",
+                "nodes", "links", "edges"]
 EVENT_COLS = ["repo", "path", "commit", "lang", "content", "deleted", "seq"]
 CORPUS_COLS = ["repo", "path", "commit", "lang", "content"]
 
@@ -364,8 +364,8 @@ def test_batch_killed_before_stage_resumes(spark, bootstrapped, stage,
 
 def test_other_batch_does_not_resume_half_written_snapshot(
         spark, bootstrapped, monkeypatch):
-    """Batch 1 dies before ``prepared`` with its corpus, pins, triples and
-    entities committed. After a restart, a DIFFERENT batch 2 lands at the
+    """Batch 1 dies before ``prepared`` with its corpus, pins and triples
+    committed. After a restart, a DIFFERENT batch 2 lands at the
     same version: it must start that snapshot empty, so the live KG equals
     a from-scratch build of batch 2's fold, with batch 1's rows nowhere."""
     boot, batch1, _, v1 = bootstrapped
@@ -380,7 +380,7 @@ def test_other_batch_does_not_resume_half_written_snapshot(
         )
     monkeypatch.delenv("KG_FAIL_BEFORE_STAGE")
     assert set(_manifests(store)) == {
-        "corpus", "_v2_lineage", "_changed_files", "triples", "entities"
+        "corpus", "_v2_lineage", "_changed_files", "triples"
     }
 
     # batch 2: rename a class in a dst-side file, add one file

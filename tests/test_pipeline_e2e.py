@@ -122,12 +122,12 @@ def test_kill_and_restart(spark, small_corpus):
         del os.environ["KG_FAIL_BEFORE_STAGE"]
 
     # stages before the crash are committed
-    for done in ["triples", "entities", "prepared", "candidate_pairs"]:
+    for done in ["triples", "prepared", "candidate_pairs"]:
         assert store.is_complete(done), done
     assert not store.is_complete("scored_pairs")
     mtimes = {
         s: os.path.getmtime(store._manifest_path(s))
-        for s in ["triples", "entities", "prepared", "candidate_pairs"]
+        for s in ["triples", "prepared", "candidate_pairs"]
     }
 
     out = KGPipeline(spark, store).run(sf)  # restart
@@ -237,11 +237,19 @@ def test_store_manifest_rows_and_schema(spark, e2e):
     """A commit counts rows on the write and reads back with the manifest's
     schema: both must equal what a re-count and parquet's own schema
     inference give, for every pipeline stage and for an empty stage; a
-    resumed stage returns the committed rows."""
+    resumed stage returns the committed rows. A build commits exactly
+    these stages: entities and mentions are projections of ``triples``."""
+    import glob
+    import os
+
     _, _, store = e2e
-    stages = ["triples", "entities", "prepared", "candidate_pairs",
-              "scored_pairs", "alignment", "nodes", "mentions", "links",
-              "edges"]
+    stages = ["triples", "prepared", "candidate_pairs", "scored_pairs",
+              "alignment", "nodes", "links", "edges"]
+    committed = {
+        os.path.basename(p)[: -len(".manifest.json")]
+        for p in glob.glob(os.path.join(store.root, "*.manifest.json"))
+    }
+    assert committed == set(stages)
     empty = CheckpointStore(spark, tempfile.mkdtemp(prefix="kg_empty_"))
     empty.stage("none", lambda: store.read("alignment").limit(0))
     for st, name in [(store, s) for s in stages] + [(empty, "none")]:

@@ -28,7 +28,10 @@ def prep() -> None:
     """Materialize a fixed input once: src_files + candidate name pairs."""
     from ontologymatching_spark.corpus.generator import generate_corpus
     from ontologymatching_spark.operators import blocking, matchers
-    from ontologymatching_spark.operators.extract import extract_entities
+    from ontologymatching_spark.operators.extract import (
+        entities_from_triples,
+        extract_triples,
+    )
     from ontologymatching_spark.session import get_spark
     from pyspark.sql import functions as F
 
@@ -38,7 +41,7 @@ def prep() -> None:
     sf = spark.createDataFrame(src_files).repartition(256)
     sf.write.mode("overwrite").parquet(f"{PREP_DIR}/src_files")
 
-    e = matchers.prepare_entities(extract_entities(sf))
+    e = matchers.prepare_entities(entities_from_triples(extract_triples(sf)))
     e = matchers.with_virtual_doc(e)
     org = F.regexp_extract(F.col("repo"), r"org(\d+)", 1).cast("int")
     e = e.withColumn(

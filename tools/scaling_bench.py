@@ -41,9 +41,8 @@ def run_one(master: str, n_repos: int, files_per_repo: int) -> None:
     n_align = out["alignment"].count()
     wall = time.time() - t0
     stages = {}
-    for s in ["triples", "entities", "prepared", "candidate_pairs",
-              "scored_pairs", "alignment", "nodes", "mentions", "links",
-              "edges"]:
+    for s in ["triples", "prepared", "candidate_pairs", "scored_pairs",
+              "alignment", "nodes", "links", "edges"]:
         try:
             m = store.manifest(s)
             stages[s] = {"wall_sec": m.get("wall_sec"),
