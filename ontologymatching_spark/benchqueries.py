@@ -38,9 +38,8 @@ def _fan(df: DataFrame) -> DataFrame:
     round-robin exchange of the narrow base rows (≤ a few MB) buys
     full-core parallelism for every pair kernel downstream. The partition
     count derives from the session's advertised parallelism — scale-adaptive,
-    never a local constant; SPARK_GRAFT_FAN_PARTS overrides for cluster
-    tuning (on a real cluster multi-file table layouts make this a no-op
-    cost: the exchange is still ~row-count bytes)."""
+    never a local constant (on a real cluster multi-file table layouts make
+    this a no-op cost: the exchange is still ~row-count bytes)."""
     from .partitions import fan_parts
 
     return df.repartition(fan_parts(df))

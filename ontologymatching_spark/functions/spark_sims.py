@@ -132,36 +132,11 @@ def stem_nodigit_norm_udf(s: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(DoubleType())
-def substring_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """ISub substring metric (ISubSim.java:10-140 / Stoilos 2005)."""
-    return pd.Series(
-        [simkernels.substring_sim(x, y) for x, y in zip(a, b)], dtype="float64"
-    )
-
-
-@F.pandas_udf(DoubleType())
-def amsub_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """AMSubstring metric (AMSubstringSim.java:14-107) — distinct from ISub:
-    >=3-length peels, fragmentation penalty, residual-prefix Winkler."""
-    return pd.Series(
-        [simkernels.amsub_sim(x, y) for x, y in zip(a, b)], dtype="float64"
-    )
-
-
-@F.pandas_udf(DoubleType())
 def amsub_edit_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """AMSUB_AND_EDIT = 0.65*AMSubstring + 0.35*lev-min-norm
     (AMSubEditSim.java:7-18)."""
     return pd.Series(
         [simkernels.amsub_edit(x, y) for x, y in zip(a, b)], dtype="float64"
-    )
-
-
-@F.pandas_udf(DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Jaro-Winkler (JaroWinklerSim.java)."""
-    return pd.Series(
-        [simkernels.jaro_winkler(x, y) for x, y in zip(a, b)], dtype="float64"
     )
 
 

@@ -1,21 +1,16 @@
-"""Per-component assignment selection — the reference's exact-1-1 selectors
+"""Per-component optimal assignment — the reference's exact-1-1 selectors
 (MaxWeightBipartiteMatching.java:128-310, HungarianAlgorithm.java:47-613) are
 inherently sequential global algorithms; the Spark-native strategy is to
 partition the candidate graph into connected components (small after
 blocking) and solve each component independently inside a grouped pandas UDF
 (SURVEY.md §2.6).
 
-``select_greedy_by_component`` reproduces the global greedy (chooseBestN)
-result exactly: components are independent, and greedy on each component in
-the global deterministic order equals global greedy restricted to it. It is
-an alternative PHYSICAL plan for selection.select_one_to_one — one shuffle +
-a CC loop instead of O(rounds) global window passes; preferable when rounds
-are many or pair counts per round are small.
-
-``select_optimal_by_component`` additionally solves each component as a
-max-weight bipartite assignment (exact DP/auction-free implementation below,
-pure Python — no scipy in this environment), matching the reference's MWBM
-semantics for small components.
+``select_optimal_by_component`` solves each component as a max-weight
+bipartite assignment (exact DP/auction-free implementation below, pure
+Python — no scipy in this environment), matching the reference's MWBM
+semantics for small components. The greedy 1-1 (chooseBestN) is
+``selection.select_one_to_one``; a component too large for the exact
+solver falls back to its sequential pass, ``selection._greedy_tail``.
 """
 
 from __future__ import annotations
@@ -28,6 +23,7 @@ from pyspark.sql.types import (
 )
 
 from .components import connected_components
+from .selection import _greedy_tail
 
 _OUT_SCHEMA = StructType(
     [
@@ -40,24 +36,6 @@ _OUT_SCHEMA = StructType(
 )
 
 
-def _greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values(
-        ["sim", "src_uri", "dst_uri"], ascending=[False, True, True]
-    )
-    used_s: set = set()
-    used_d: set = set()
-    keep = []
-    for row in pdf.itertuples(index=False):
-        if row.src_id in used_s or row.dst_id in used_d:
-            continue
-        used_s.add(row.src_id)
-        used_d.add(row.dst_id)
-        keep.append(row)
-    return pd.DataFrame(keep, columns=pdf.columns)[
-        ["src_id", "dst_id", "src_uri", "dst_uri", "sim"]
-    ]
-
-
 def _hungarian_small(pdf: pd.DataFrame) -> pd.DataFrame:
     """Exact max-weight bipartite matching per component via O(n^2 m)
     augmenting-path search (Kuhn-Munkres on the sparse pair list). Components
@@ -65,7 +43,7 @@ def _hungarian_small(pdf: pd.DataFrame) -> pd.DataFrame:
     srcs = {s: i for i, s in enumerate(sorted(pdf["src_id"].unique()))}
     dsts = {d: j for j, d in enumerate(sorted(pdf["dst_id"].unique()))}
     if len(srcs) * len(dsts) > 250_000:
-        return _greedy(pdf)
+        return _greedy_tail(pdf)
     import numpy as np
 
     w = np.zeros((len(srcs), len(dsts)))
@@ -133,7 +111,8 @@ def _hungarian_small(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _by_component(pairs: DataFrame, solver, threshold: float) -> DataFrame:
+def select_optimal_by_component(pairs: DataFrame, threshold: float = 0.6) -> DataFrame:
+    """Exact max-weight 1-1 per component (MWBM semantics)."""
     p = pairs.filter(F.col("sim") >= threshold).select(
         "src_id", "dst_id", "src_uri", "dst_uri", "sim"
     )
@@ -143,16 +122,6 @@ def _by_component(pairs: DataFrame, solver, threshold: float) -> DataFrame:
     )
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        return solver(pdf.drop(columns=["component_id"]))
+        return _hungarian_small(pdf.drop(columns=["component_id"]))
 
     return with_comp.groupBy("component_id").applyInPandas(solve, _OUT_SCHEMA)
-
-
-def select_greedy_by_component(pairs: DataFrame, threshold: float = 0.6) -> DataFrame:
-    """Same result as selection.select_one_to_one, different physical plan."""
-    return _by_component(pairs, _greedy, threshold)
-
-
-def select_optimal_by_component(pairs: DataFrame, threshold: float = 0.6) -> DataFrame:
-    """Exact max-weight 1-1 per component (MWBM semantics)."""
-    return _by_component(pairs, _hungarian_small, threshold)

@@ -212,12 +212,6 @@ def lwc_average(pairs_sims: DataFrame, sim_cols: list[str]) -> DataFrame:
     return pairs_sims.withColumn("sim", expr)
 
 
-def lwc_max(pairs_sims: DataFrame, sim_cols: list[str]) -> DataFrame:
-    return pairs_sims.withColumn(
-        "sim", F.greatest(*[F.coalesce(F.col(c), F.lit(0.0)) for c in sim_cols])
-    )
-
-
 def lwc_sigmoid_average(pairs_sims: DataFrame, sim_cols: list[str]) -> DataFrame:
     """SIGMOIDAVERAGECOMB (CombinationMatcher.java:151-153,182-186): average
     of sigmoid-rescaled similarities, sigmoid = 1/(1+exp(-5*(x-0.5)))

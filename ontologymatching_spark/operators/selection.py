@@ -1,12 +1,11 @@
 """Alignment selection — the reference's ``scanMatrix`` dispatch
-(AbstractMatcher.java:758-792) re-expressed over the sparse pair table:
+(AbstractMatcher.java:758-792) re-expressed over the sparse pair table, in
+the two modes the KG pipeline runs:
 
-  ANY-ANY → everything over threshold        (getThemAll :884-895)
   N-ANY   → top-k per source row              (:839-877, getRowMaxValues)
-  ANY-N   → top-k per target column
-  1-1     → iterative mutual-best (greedy / stable-marriage semantics of
-            scanWithBothConstraints :897-1041 and chooseBestN
-            ArraySimilarityMatrix.java:513-566)
+  1-1     → the greedy of scanWithBothConstraints :897-1041 and chooseBestN
+            (ArraySimilarityMatrix.java:513-566): mutual-best rounds, then
+            one sequential pass (``select_one_to_one``)
 
 Determinism: the reference's loops are index-ordered (:953). Under Spark
 parallelism we must make tie-breaking explicit — everywhere the order is
@@ -35,27 +34,12 @@ def _w_dst():
     )
 
 
-def select_all(pairs: DataFrame, threshold: float = 0.6) -> DataFrame:
-    """ANY-ANY: keep every pair over threshold (getThemAll)."""
-    return pairs.filter(F.col("sim") >= threshold)
-
-
 def select_topk_per_src(pairs: DataFrame, k: int, threshold: float = 0.6) -> DataFrame:
     """N-ANY: top-k per source (getRowMaxValues,
     ArraySimilarityMatrix.java:231-255)."""
     return (
         pairs.filter(F.col("sim") >= threshold)
         .withColumn("rn", F.row_number().over(_w_src()))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def select_topk_per_dst(pairs: DataFrame, k: int, threshold: float = 0.6) -> DataFrame:
-    """ANY-N: top-k per target (getColMaxValues :269-295)."""
-    return (
-        pairs.filter(F.col("sim") >= threshold)
-        .withColumn("rn", F.row_number().over(_w_dst()))
         .filter(F.col("rn") <= k)
         .drop("rn")
     )
@@ -73,6 +57,9 @@ def select_topk_per_dst(pairs: DataFrame, k: int, threshold: float = 0.6) -> Dat
 # spread of the rounds-only selection (110-151 s over all runs). A larger
 # bound buys no measured time and grows the one task's memory.
 TAIL_ROWS = 1_000_000
+# mutual-best rounds between two checkpoints of the remainder (see
+# ``select_one_to_one``)
+CKPT_EVERY = 3
 
 
 def _greedy_tail(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -99,7 +86,6 @@ def select_one_to_one(
     pairs: DataFrame,
     threshold: float = 0.6,
     max_rounds: int = 50,
-    ckpt_every: int = 3,
     stats: dict | None = None,
 ) -> DataFrame:
     """Greedy 1-1 selection: mutual-best rounds while the input is large,
@@ -123,7 +109,7 @@ def select_one_to_one(
     - the tiny per-round ``best`` is localCheckpointed (so later rounds'
       anti-joins reference materialized rows, never re-running earlier
       rounds' windows), while the big ``remaining`` is localCheckpointed
-      and counted only every ``ckpt_every`` rounds: between checkpoints the
+      and counted only every ``CKPT_EVERY`` rounds: between checkpoints the
       removals are broadcast hash anti-joins that pipeline into the next
       round's window scan — re-streaming the last checkpoint through a few
       hash filters is far cheaper than writing a 20M-row intermediate per
@@ -134,11 +120,12 @@ def select_one_to_one(
       tail task, where the rounds would cost Spark jobs for every round
       until the fixpoint (the benchmark's `update` batch: 15 jobs for 21
       selected pairs out of 1557, against 5 with the tail). An earlier
-      tail handoff through ``assignment.select_greedy_by_component`` was
-      measured and rejected at sf1 (from the round-12 remainder of 53k
-      rows, 18.6 s against 4.3 s for 9 more rounds): that handoff paid
-      connected components' fixed round costs, which the single pandas
-      task does not. The tail never takes more than ``TAIL_ROWS`` rows,
+      tail handoff to a per-component greedy (connected components of the
+      remainder, then one pandas group per component) was measured and
+      rejected at sf1 (from the round-12 remainder of 53k rows, 18.6 s
+      against 4.3 s for 9 more rounds): that handoff paid connected
+      components' fixed round costs, which the single pandas task does
+      not. The tail never takes more than ``TAIL_ROWS`` rows,
       which bounds the one task's time and memory (see ``TAIL_ROWS``).
 
     ``max_rounds`` caps the rounds. If it stops them while the remainder
@@ -164,7 +151,7 @@ def select_one_to_one(
     # branches re-stream the remaining set twice and add a third shuffle,
     # while the chained windows pass the data once.
     while n > TAIL_ROWS and rounds < max_rounds:
-        for _ in range(min(ckpt_every, max_rounds - rounds)):
+        for _ in range(min(CKPT_EVERY, max_rounds - rounds)):
             # lazy checkpoint + count = ONE job per round (the count action
             # materializes the checkpoint)
             best = (

@@ -13,20 +13,14 @@ Two recurring local-layout/AQE interactions motivate explicit partitioning
    user-specified repartitions are exempt from AQE coalescing.
 
 The count derives from the session's advertised parallelism — never a
-local constant — and SPARK_GRAFT_FAN_PARTS overrides it for cluster
-tuning. On a real cluster with multi-file tables and byte-heavy shuffles
-both fixes are cheap no-ops (the exchanges stay ~row-count bytes).
+local constant. On a real cluster with multi-file tables and byte-heavy
+shuffles both fixes are cheap no-ops (the exchanges stay ~row-count bytes).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 
 
 def fan_parts(df: DataFrame) -> int:
-    env = os.environ.get("SPARK_GRAFT_FAN_PARTS")
-    if env:
-        return int(env)
     return 2 * df.sparkSession.sparkContext.defaultParallelism

@@ -1,12 +1,12 @@
-"""Stage checkpointing + resume (north rule: "every stage checkpoints to
-Iceberg snapshots so the job resumes mid-pipeline").
+"""Stage checkpointing and resume.
 
-Locally we have no Iceberg catalog jar, so the snapshot store is a directory
-of parquet tables with atomic JSON manifests — the same commit protocol
-(write data → write manifest last; a stage is complete iff its manifest
-exists). On a real cluster, ``fmt='iceberg'`` writes through
-``df.writeTo(table).createOrReplace()`` instead; the resume logic is
-identical because Iceberg snapshots are the manifests.
+A store is a directory with one parquet table per stage and one JSON
+manifest per stage. The commit protocol: write the data, then write the
+manifest last, by an atomic rename. A stage is complete iff its manifest
+exists, so a killed write never looks complete and a restart resumes from
+the last committed stage. The manifest also records the stage's rows,
+schema, files, bytes and wall time, so reading them back runs no job.
+This is the store's one format.
 
 Analog in the reference: matcher/matrix Java-serialization reuse
 (mappingEngine/persistance/PersistanceUtility.java).
@@ -25,31 +25,17 @@ from pyspark.sql import types as T
 
 
 class CheckpointStore:
-    """``fmt='parquet'`` (default): directory-of-parquet + JSON manifest
-    store — what this sandbox runs. ``fmt='iceberg'``: stages commit as
-    Iceberg tables ``<root>.<stage>`` (``root`` is then a catalog.namespace
-    string, e.g. ``lake.kg``); the Iceberg snapshot IS the manifest, and
-    resume reads the table back. Requires the iceberg-spark-runtime jar +
-    catalog conf on the cluster (not present locally — constructor verifies
-    and fails fast with a clear message)."""
+    """A directory of parquet stage tables, each committed by its JSON
+    manifest (see the module docstring)."""
 
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
+    # the one format, as an attribute: every manifest records it, and the
+    # benchmark's stage tracer (perfbench/stagetrace.py) reads ``store.fmt``
+    fmt = "parquet"
+
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.fmt = fmt
-        if fmt == "iceberg":
-            catalog = root.split(".", 1)[0]
-            impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-            if not impl:
-                raise RuntimeError(
-                    f"fmt='iceberg' needs spark.sql.catalog.{catalog} "
-                    "configured (iceberg-spark-runtime jar + catalog conf); "
-                    "use fmt='parquet' locally"
-                )
-        elif fmt == "parquet":
-            os.makedirs(root, exist_ok=True)
-        else:
-            raise ValueError(f"unknown checkpoint format: {fmt!r}")
+        os.makedirs(root, exist_ok=True)
 
     # -- manifest protocol --------------------------------------------------
 
@@ -59,33 +45,21 @@ class CheckpointStore:
     def _manifest_path(self, stage: str) -> str:
         return os.path.join(self.root, f"{stage}.manifest.json")
 
-    def _table(self, stage: str) -> str:
-        return f"{self.root}.{stage}"
-
     def is_complete(self, stage: str) -> bool:
-        if self.fmt == "iceberg":
-            return self.spark.catalog.tableExists(self._table(stage))
         return os.path.exists(self._manifest_path(stage))
 
     def read(self, stage: str) -> DataFrame:
-        """A committed stage. The parquet read takes its schema from the
-        manifest, so it runs no schema-inference job (parquet reads make
-        every column nullable, as inference would)."""
-        if self.fmt == "iceberg":
-            return self.spark.read.table(self._table(stage))
+        """A committed stage. The read takes its schema from the manifest,
+        so it runs no schema-inference job (parquet reads make every column
+        nullable, as inference would)."""
         schema = T.StructType.fromJson(self.manifest(stage)["schema"])
         return self.spark.read.schema(schema).parquet(self._data_path(stage))
 
     def rows(self, stage: str) -> int:
         """Row count of a committed stage, from its manifest (no job)."""
-        if self.fmt == "iceberg":
-            return self.read(stage).count()
         return self.manifest(stage)["rows"]
 
     def invalidate(self, stage: str) -> None:
-        if self.fmt == "iceberg":
-            self.spark.sql(f"DROP TABLE IF EXISTS {self._table(stage)}")
-            return
         mp = self._manifest_path(stage)
         if os.path.exists(mp):
             os.remove(mp)
@@ -102,10 +76,10 @@ class CheckpointStore:
         (FIXTURES.md §3.9). Manifest is written only after the data commit
         succeeds, so a killed write never looks complete.
 
-        A parquet commit is the write's own job(s) and nothing else: the
-        row count is observed on the write, and the read-back takes the
-        written frame's schema, so neither a re-count nor a schema
-        inference runs."""
+        A commit is the write's own job(s) and nothing else: the row count
+        is observed on the write, and the read-back takes the written
+        frame's schema, so neither a re-count nor a schema inference
+        runs."""
         if not force and self.is_complete(name):
             return self.read(name)
         # crash injection for the kill-and-restart resume test
@@ -115,17 +89,12 @@ class CheckpointStore:
             raise RuntimeError(f"injected crash before stage '{name}'")
         t0 = time.time()
         df = fn()
-        if self.fmt == "iceberg":
-            # a createOrReplace is ONE atomic Iceberg snapshot commit: a
-            # killed write leaves the previous snapshot (or no table) —
-            # same manifest-last protocol, enforced by the table format
-            df.writeTo(self._table(name)).using("iceberg").createOrReplace()
-            return self.read(name)
         path = self._data_path(name)
         obs = Observation(f"checkpoint_{name}")
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).parquet(path)
+        parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
         manifest = {
             "stage": name,
             "format": self.fmt,
@@ -135,13 +104,9 @@ class CheckpointStore:
             "inputs": inputs or [],
             # stage metrics (north rule: checkpoints carry lineage + metrics)
             "wall_sec": round(time.time() - t0, 3),
-            "n_files": len(
-                [f for f in os.listdir(path) if f.endswith(".parquet")]
-            ),
+            "n_files": len(parts),
             "bytes": sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
+                os.path.getsize(os.path.join(path, f)) for f in parts
             ),
         }
         tmp = self._manifest_path(name) + ".tmp"
@@ -156,27 +121,12 @@ class CheckpointStore:
         """Small store-level JSON record (e.g. the pipeline's code/config
         fingerprint, written before any stage so later runs can refuse to
         reuse stages produced under different matcher semantics)."""
-        if self.fmt == "iceberg":
-            df = self.spark.createDataFrame(
-                [(name, json.dumps(data, sort_keys=True))],
-                "name string, json string",
-            )
-            df.writeTo(self._table(f"_meta_{name}")).using(
-                "iceberg"
-            ).createOrReplace()
-            return
         tmp = os.path.join(self.root, f"{name}.meta.json.tmp")
         with open(tmp, "w") as f:
             json.dump(data, f, indent=1, sort_keys=True)
         os.replace(tmp, os.path.join(self.root, f"{name}.meta.json"))
 
     def read_meta(self, name: str) -> dict | None:
-        if self.fmt == "iceberg":
-            t = self._table(f"_meta_{name}")
-            if not self.spark.catalog.tableExists(t):
-                return None
-            rows = self.spark.read.table(t).collect()
-            return json.loads(rows[0].json) if rows else None
         path = os.path.join(self.root, f"{name}.meta.json")
         if not os.path.exists(path):
             return None
@@ -184,17 +134,5 @@ class CheckpointStore:
             return json.load(f)
 
     def manifest(self, stage: str) -> dict:
-        if self.fmt == "iceberg":
-            # the Iceberg snapshot log IS the manifest
-            snaps = self.spark.sql(
-                f"SELECT snapshot_id, committed_at FROM "
-                f"{self._table(stage)}.snapshots ORDER BY committed_at DESC"
-            ).limit(1).collect()
-            return {
-                "stage": stage,
-                "format": "iceberg",
-                "table": self._table(stage),
-                "snapshot_id": snaps[0].snapshot_id if snaps else None,
-            }
         with open(self._manifest_path(stage)) as f:
             return json.load(f)

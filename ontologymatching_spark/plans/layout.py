@@ -7,8 +7,7 @@ A pair of tables bucketed by the same key into the same bucket count
 sort-merge-join WITHOUT an Exchange on either side: at 100 TB the
 candidate-pair ↔ feature joins and the repeated (src_id, dst_id) stage
 joins run co-located, paying the shuffle once at write time instead of
-once per join. (Iceberg: the same idea spelled `bucket(N, col)` partition
-transforms + storage-partitioned joins.)
+once per join.
 """
 
 from __future__ import annotations

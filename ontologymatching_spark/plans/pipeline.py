@@ -45,18 +45,36 @@ from ..operators.linking import link_mentions, mentions_from_triples
 from .checkpoint import CheckpointStore
 
 
+# Fixed settings of the KG core. The config fingerprint records each under
+# its own key, so the fingerprints of existing stores stay valid.
+MAX_BLOCK_PAIRS = 10_000  # hot-block cap of blocking.candidate_pairs
+TOPK_GUARD = 50  # per-source candidate cap before the 1-1 selection
+DSI_MCP = 0.75  # DSI: weight of a pair's own sim against its parents'
+
+
 @dataclass
 class PipelineConfig:
     threshold: float = 0.6
-    max_block_pairs: int = 10_000
-    combination: str = "average"  # average | max | lwc
-    topk_guard: int = 50  # per-source candidate cap before selection
+    combination: str = "average"  # average | lwc
     # optional structural refinement between combine and select
     # (SURVEY.md §7.9 boost stage; off by default — the oracle models the
     # base ensemble). True/"dsi" → DSI parent blend; "iism" → IISM rule
     # boosts (the OAEI GENERAL_PURPOSE shape, OAEI2011Matcher.java:209-231).
     structural_boost: bool | str = False
-    dsi_mcp: float = 0.75
+
+    def __post_init__(self):
+        if self.combination not in ("average", "lwc"):
+            raise ValueError(
+                f"PipelineConfig.combination={self.combination!r}: "
+                "expected 'average' or 'lwc'"
+            )
+        # isinstance: 1 == True, so an ``in`` test would let 1 through
+        if not (isinstance(self.structural_boost, bool)
+                or self.structural_boost in ("dsi", "iism")):
+            raise ValueError(
+                f"PipelineConfig.structural_boost={self.structural_boost!r}: "
+                "expected False, True, 'dsi' or 'iism'"
+            )
 
 
 # Bump when extraction/matcher/selection SEMANTICS change (anything that
@@ -82,11 +100,11 @@ def config_fingerprint(cfg: "PipelineConfig") -> str:
         {
             "code": PIPELINE_CODE_VERSION,
             "threshold": cfg.threshold,
-            "max_block_pairs": cfg.max_block_pairs,
+            "max_block_pairs": MAX_BLOCK_PAIRS,
             "combination": cfg.combination,
-            "topk_guard": cfg.topk_guard,
+            "topk_guard": TOPK_GUARD,
             "structural_boost": cfg.structural_boost,
-            "dsi_mcp": cfg.dsi_mcp,
+            "dsi_mcp": DSI_MCP,
         },
         sort_keys=True,
     )
@@ -99,9 +117,7 @@ def combine_scores(pf: DataFrame, cfg: "PipelineConfig") -> DataFrame:
     varies with partitioning by ~1 ULP; rounding makes selection tie-breaks
     bit-stable across parallelism levels, SURVEY.md §4(d))."""
     sim_cols = ["sim_bsm", "sim_psm", "sim_vmm"]
-    if cfg.combination == "max":
-        pf = matchers.lwc_max(pf, sim_cols)
-    elif cfg.combination == "lwc":
+    if cfg.combination == "lwc":
         pf = matchers.lwc_quality_weighted(pf, sim_cols)
     else:
         pf = matchers.lwc_average(pf, sim_cols)
@@ -170,7 +186,7 @@ def apply_structural_boost(scored: DataFrame, triples: DataFrame,
             "src_id", "dst_id", F.col("sim_iism").alias("sim")
         )
     else:  # True / "dsi"
-        boosted = dsi(base, sp, dp, mcp=cfg.dsi_mcp).select(
+        boosted = dsi(base, sp, dp, mcp=DSI_MCP).select(
             "src_id", "dst_id", F.col("sim_dsi").alias("sim")
         )
     return scored.drop("sim").join(boosted, ["src_id", "dst_id"])
@@ -311,7 +327,7 @@ class KGPipeline:
 
         pairs = st.stage(
             "candidate_pairs",
-            lambda: blocking.candidate_pairs(src_e, dst_e, cfg.max_block_pairs),
+            lambda: blocking.candidate_pairs(src_e, dst_e, MAX_BLOCK_PAIRS),
             inputs=["prepared"],
         )
 
@@ -373,7 +389,7 @@ class KGPipeline:
             # guard: cap candidates per source before the iterative selection
             # (bounds the loop's working set at scale)
             guarded = selection.select_topk_per_src(
-                scored, cfg.topk_guard, cfg.threshold
+                scored, TOPK_GUARD, cfg.threshold
             )
             return selection.select_one_to_one(guarded, cfg.threshold)
 

@@ -45,17 +45,15 @@ def default_driver_memory() -> str | None:
 def get_spark(
     app_name: str = "ontologymatching-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local[N] → N; local[*] → cpu count; cluster masters → 4x default hint
-        if master.startswith("local["):
-            inner = master[len("local[") : -1]
-            shuffle_partitions = cpus if inner == "*" else int(inner)
-        else:
-            shuffle_partitions = 4 * cpus
+    # local[N] → N; local[*] → cpu count; cluster masters → 4x default hint
+    if master.startswith("local["):
+        inner = master[len("local[") : -1]
+        shuffle_partitions = cpus if inner == "*" else int(inner)
+    else:
+        shuffle_partitions = 4 * cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -78,17 +76,11 @@ def get_spark(
         # bounded at any corpus size (the 100 TB lever is partition count,
         # never partition size)
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # zstd by default: trades scalable CPU for the non-scalable I/O bytes
-        # that cap strong scaling — measured 205s → 184s on the 100k-file
-        # pipeline at local[32] (BENCH.md); env-tunable for A/B
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"),
-        )
+        # zstd: trades scalable CPU for the non-scalable I/O bytes that cap
+        # strong scaling — measured 205s → 184s on the 100k-file pipeline
+        # at local[32] (BENCH.md)
+        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.ui.showConsoleProgress", "false")
     )
     # local mode runs driver+executors in ONE JVM: size the heap for all

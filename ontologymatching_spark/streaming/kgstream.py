@@ -33,9 +33,8 @@ Scale notes (100 TB story):
   * The fold (prev corpus ∖ batch keys ∪ batch upserts) is an anti-join
     keyed on (repo, path) with the diff-sized batch side broadcast, so the
     corpus side does not shuffle. It commits as the ``corpus`` stage of
-    the version's store, which writes the whole folded corpus: a parquet
-    overwrite locally, ``createOrReplace`` of the stage table with
-    fmt="iceberg". The per-batch write is therefore corpus-sized.
+    the version's store, which writes the whole folded corpus as a parquet
+    overwrite. The per-batch write is therefore corpus-sized.
   * Re-matching cost per batch is the update's: re-parse + re-score only
     what the file diff touches (pair-local reuse), global stages recompute
     on alignment-sized inputs.

@@ -309,10 +309,10 @@ def _live_rows(spark, corpus: pd.DataFrame) -> dict:
 
 
 def _manifests(store: str) -> dict:
-    """{stage: manifest mtime} of the BATCH_STAGES committed in ``store``."""
-    return {s: os.path.getmtime(os.path.join(store, f"{s}.manifest.json"))
-            for s in BATCH_STAGES
-            if os.path.exists(os.path.join(store, f"{s}.manifest.json"))}
+    """{stage: manifest mtime} of every stage committed in ``store``."""
+    suffix = ".manifest.json"
+    return {f[:-len(suffix)]: os.path.getmtime(os.path.join(store, f))
+            for f in os.listdir(store) if f.endswith(suffix)}
 
 
 @pytest.fixture(scope="module")
@@ -354,6 +354,7 @@ def test_batch_killed_before_stage_resumes(spark, bootstrapped, stage,
     mt2.apply_batch(_event_df(spark, batch), 1)
     assert mt2.version == 1
     resumed = _manifests(store)
+    assert set(resumed) == set(BATCH_STAGES)
     assert all(resumed[s] == t for s, t in committed.items())
     for name, cols in LIVE_COLS.items():
         assert _rows(mt2.last_outputs[name], cols) == want[name], name

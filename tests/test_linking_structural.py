@@ -123,32 +123,6 @@ def test_similarity_flooding_converges_and_boosts_connected(spark, family):
 # ---------------------------------------------------------------------------
 
 
-def _rand_pairs(spark, n_src=15, n_dst=15, seed=3):
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n_src):
-        for j in range(n_dst):
-            if rng.random() < 0.3:
-                rows.append(
-                    (i, 100 + j, f"s{i:02d}", f"d{j:02d}",
-                     float(np.round(rng.random(), 6)))
-                )
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["src_id", "dst_id", "src_uri", "dst_uri", "sim"])
-    )
-
-
-def test_greedy_by_component_equals_global_greedy(spark):
-    pairs = _rand_pairs(spark)
-    a = selection.select_one_to_one(pairs, threshold=0.2).toPandas()
-    b = assignment.select_greedy_by_component(pairs, threshold=0.2).toPandas()
-    ka = {(r.src_id, r.dst_id) for r in a.itertuples()}
-    kb = {(r.src_id, r.dst_id) for r in b.itertuples()}
-    assert ka == kb
-
-
 def test_optimal_beats_or_ties_greedy(spark):
     # classic greedy-suboptimal block: greedy takes (a,x,0.9) leaving b with
     # 0.1; optimal takes (a,y,0.8)+(b,x,0.85)
@@ -162,7 +136,7 @@ def test_optimal_beats_or_ties_greedy(spark):
             columns=["src_id", "dst_id", "src_uri", "dst_uri", "sim"],
         )
     )
-    greedy = assignment.select_greedy_by_component(pairs, threshold=0.0).toPandas()
+    greedy = selection.select_one_to_one(pairs, threshold=0.0).toPandas()
     opt = assignment.select_optimal_by_component(pairs, threshold=0.0).toPandas()
     assert greedy["sim"].sum() == pytest.approx(0.9)
     assert opt["sim"].sum() == pytest.approx(0.8 + 0.85)

@@ -10,7 +10,9 @@ from ontologymatching_spark.corpus.generator import generate_corpus
 from ontologymatching_spark.operators.evaluate import precision_recall
 from ontologymatching_spark.oracle.matcher_oracle import match_oracle
 from ontologymatching_spark.plans.checkpoint import CheckpointStore
-from ontologymatching_spark.plans.pipeline import KGPipeline
+from ontologymatching_spark.plans.pipeline import (
+    KGPipeline, PipelineConfig, config_fingerprint,
+)
 
 
 def test_corpus_deterministic():
@@ -90,8 +92,6 @@ def test_structural_boost_pipeline(spark, small_corpus):
     alignment (rows-only check — the oracle models the base ensemble)."""
     import tempfile
 
-    from ontologymatching_spark.plans.pipeline import PipelineConfig
-
     src_files, _ = small_corpus
     out = KGPipeline(
         spark,
@@ -170,8 +170,6 @@ def test_pr_vs_oracle_second_seed(spark):
 def test_iism_boost_pipeline(spark, small_corpus):
     import tempfile
 
-    from ontologymatching_spark.plans.pipeline import PipelineConfig
-
     src_files, _ = small_corpus
     out = KGPipeline(
         spark,
@@ -183,15 +181,33 @@ def test_iism_boost_pipeline(spark, small_corpus):
     assert a["src_id"].is_unique and a["dst_id"].is_unique
 
 
-def test_checkpoint_format_gating(spark):
-    """fmt='iceberg' needs a configured catalog (jar absent locally) — the
-    store must fail fast with a clear message; unknown formats rejected."""
-    from ontologymatching_spark.plans.checkpoint import CheckpointStore
+@pytest.mark.parametrize("config, digest", [
+    ({}, "2f01d02a38c871fa688a6f3a074b27b0d5fb91037733e28fba7854d882a88125"),
+    ({"structural_boost": "iism", "combination": "lwc"},
+     "cd0a57f88c3eb596f8fffd0df074b4942104cf211bd986d97a26007d0e97ab6d"),
+    ({"structural_boost": "dsi"},
+     "3b6623256d9594e70d1481faf6926199b22e1212d8b66c120dc403a82e20a905"),
+], ids=["default", "iism_lwc", "dsi"])
+def test_config_fingerprint_pinned(config, digest):
+    """The fingerprint a store records must not drift: an update refuses a
+    ``prev`` whose fingerprint differs, so a change here voids every
+    existing store as a base for updates."""
+    assert config_fingerprint(PipelineConfig(**config)) == digest
 
-    with pytest.raises(RuntimeError, match="spark.sql.catalog.lake"):
-        CheckpointStore(spark, "lake.kg", fmt="iceberg")
-    with pytest.raises(ValueError, match="unknown checkpoint format"):
-        CheckpointStore(spark, "/tmp/x", fmt="orc")
+
+@pytest.mark.parametrize("config, field", [
+    ({"combination": "LWC"}, "combination"),
+    ({"combination": "max"}, "combination"),
+    ({"combination": "weighted"}, "combination"),
+    ({"structural_boost": "IISM"}, "structural_boost"),
+    ({"structural_boost": "flood"}, "structural_boost"),
+    ({"structural_boost": 1}, "structural_boost"),
+])
+def test_config_rejects_unknown_values(config, field):
+    """An unknown combination or structural boost is an error naming the
+    field, never a silent fallback to another method."""
+    with pytest.raises(ValueError, match=f"PipelineConfig.{field}="):
+        PipelineConfig(**config)
 
 
 @pytest.mark.parametrize(
@@ -207,7 +223,6 @@ def test_canonical_projection_equals_components(spark, config):
     from pyspark.sql import functions as F
 
     from ontologymatching_spark.operators import components
-    from ontologymatching_spark.plans.pipeline import PipelineConfig
 
     src_files, _ = generate_corpus(n_repos=10, files_per_repo=6, seed=3,
                                    hot_fraction=1.0, alias_fraction=0.9)
