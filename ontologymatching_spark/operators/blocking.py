@@ -26,7 +26,7 @@ Scale levers:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 KEY_EXACT = "exact"
@@ -38,67 +38,38 @@ KEY_PREFIX = "prefix"
 UNCAPPED = (KEY_EXACT, KEY_TIER4)
 
 
-def block_keys(entities: DataFrame, side: str) -> DataFrame:
-    """entities(entity_id, norm_name, nodigit_name, kind) →
-    (entity_id, kind, key, strategy).
+def _keys() -> Column:
+    """An entity's blocking keys as one array<struct<key, strategy>>.
 
     ``kind`` is part of every key: the reference never matches classes against
     properties (alignType CLASSES/PROPERTIES, AbstractMatcher.java:147-189).
-    """
-    e = entities.select("entity_id", "kind", "norm_name", "nodigit_name")
-    t4key = F.array_join(F.array_sort(F.split(F.col("nodigit_name"), " ")), " ")
-    n_toks = F.size(F.split(F.col("norm_name"), " "))
-    exact = e.select(
-        "entity_id",
-        "kind",
-        F.concat_ws("|", F.col("kind"), F.col("norm_name")).alias("key"),
-        F.lit(KEY_EXACT).alias("strategy"),
+    Redundant-emission pruning (shuffle volume, not recall):
+      - token keys only for multi-token names (a single-token name's token
+        block IS its tier4 block, which is always emitted — note tier4 must
+        be emitted UNCONDITIONALLY: pruning it when equal to the norm name
+        would one-sidedly drop 'parser' from the block that 'parsers' maps
+        into, losing the stem pair), once per distinct token
+      - prefix keys only for single-token names (multi-token typos are
+        caught by the surviving tokens)"""
+    kind, norm = F.col("kind"), F.col("norm_name")
+    nodigit = F.col("nodigit_name")
+    n_toks = F.size(F.split(norm, " "))
+
+    def key(k, strategy):
+        return F.struct(F.concat_ws("|", kind, k).alias("key"),
+                        F.lit(strategy).alias("strategy"))
+
+    toks = F.array_distinct(
+        F.filter(F.split(nodigit, " "), lambda t: F.length(t) > 0))
+    token = F.transform(F.when(n_toks > 1, toks), lambda t: key(t, KEY_TOKEN))
+    fixed = F.array(
+        key(norm, KEY_EXACT),
+        key(F.array_join(F.array_sort(F.split(nodigit, " ")), " "), KEY_TIER4),
+        F.when((n_toks == 1) & (F.length(norm) >= 4), key(
+            F.substring(F.regexp_replace(norm, " ", ""), 1, 4), KEY_PREFIX)),
     )
-    # redundant-emission pruning (shuffle volume, not recall):
-    #  - token keys only for multi-token names (a single-token name's token
-    #    block IS its tier4 block, which is always emitted — note tier4 must
-    #    be emitted UNCONDITIONALLY: pruning it when equal to the norm name
-    #    would one-sidedly drop 'parser' from the block that 'parsers' maps
-    #    into, losing the stem pair)
-    #  - prefix keys only for single-token names (multi-token typos are
-    #    caught by the surviving tokens)
-    tier4 = e.select(
-        "entity_id",
-        "kind",
-        F.concat_ws("|", F.col("kind"), t4key).alias("key"),
-        F.lit(KEY_TIER4).alias("strategy"),
-    )
-    token = (
-        e.filter(n_toks > 1)
-        .select(
-            "entity_id",
-            "kind",
-            F.explode(F.split(F.col("nodigit_name"), " ")).alias("tok"),
-        )
-        .filter(F.length("tok") > 0)
-        .select(
-            "entity_id",
-            "kind",
-            F.concat_ws("|", F.col("kind"), F.col("tok")).alias("key"),
-            F.lit(KEY_TOKEN).alias("strategy"),
-        )
-    )
-    prefix = e.filter((n_toks == 1) & (F.length("norm_name") >= 4)).select(
-        "entity_id",
-        "kind",
-        F.concat_ws(
-            "|",
-            F.col("kind"),
-            F.substring(F.regexp_replace("norm_name", " ", ""), 1, 4),
-        ).alias("key"),
-        F.lit(KEY_PREFIX).alias("strategy"),
-    )
-    return (
-        exact.unionByName(tier4)
-        .unionByName(token)
-        .unionByName(prefix)
-        .dropDuplicates(["entity_id", "key", "strategy"])
-    )
+    return F.filter(F.concat(fixed, F.coalesce(token, F.array())),
+                    lambda k: k.isNotNull())
 
 
 def candidate_pairs(
@@ -109,6 +80,11 @@ def candidate_pairs(
     """→ distinct (src_id, dst_id). Cross-side equi-join per key with per-key
     caps on the fuzzy strategies; dedup across strategies.
 
+    One keyed pass over both sides: each entity's keys are exploded once,
+    the per-key side counts are windows over (key, strategy), and the
+    under-cap blocks are a self-join on that same key, so the key shuffle
+    is paid once.
+
     Degenerate hot blocks (FIXTURES.md §3.7 — thousands of identical 'main'/
     'utils' names): an exact/tier4 block with s_n*d_n > max_block_pairs would
     emit a quadratic pair set whose members are all near-identical-sim; the
@@ -118,51 +94,37 @@ def candidate_pairs(
     by rank-zip directly (linear, deterministic) instead of expanding n*m
     candidates. This deviates from full reference semantics only inside
     such blocks (where PSM/VMM doc similarity could reorder equal-name
-    pairs); test corpora for the P/R gate keep blocks under the cap."""
-    need = ["entity_id", "kind", "norm_name", "nodigit_name", "uri"]
-    sk = block_keys(src_entities.select(*need), "src").withColumnRenamed(
-        "entity_id", "src_id"
+    pairs); test corpora for the P/R gate keep blocks under the cap.
+    Token/prefix blocks over the cap are dropped (blocking stop-words —
+    'main', 'utils')."""
+    need = ["entity_id", "uri", "kind", "norm_name", "nodigit_name"]
+    keyed = (
+        src_entities.select(*need, F.lit(True).alias("is_src"))
+        .unionByName(dst_entities.select(*need, F.lit(False).alias("is_src")))
+        .select("entity_id", "uri", "is_src", F.explode(_keys()).alias("k"))
+        .select("entity_id", "uri", "is_src", "k.key", "k.strategy")
     )
-    dk = block_keys(dst_entities.select(*need), "dst").withColumnRenamed(
-        "entity_id", "dst_id"
+    block = Window.partitionBy("key", "strategy")
+    counted = (
+        keyed.withColumn("s_n", F.count(F.when(F.col("is_src"), 1)).over(block))
+        .withColumn("d_n", F.count(F.when(~F.col("is_src"), 1)).over(block))
+        .filter((F.col("s_n") > 0) & (F.col("d_n") > 0))
     )
-    s_uri = src_entities.select(F.col("entity_id").alias("src_id"),
-                                F.col("uri").alias("s_uri"))
-    d_uri = dst_entities.select(F.col("entity_id").alias("dst_id"),
-                                F.col("uri").alias("d_uri"))
-
-    s_cnt = sk.groupBy("key", "strategy").agg(F.count("*").alias("s_n"))
-    d_cnt = dk.groupBy("key", "strategy").agg(F.count("*").alias("d_n"))
-    key_stats = s_cnt.join(d_cnt, ["key", "strategy"])
     over_cap = F.col("s_n") * F.col("d_n") > F.lit(max_block_pairs)
 
-    kept = key_stats.filter(~over_cap).select("key", "strategy")
-    hot_exact = key_stats.filter(
-        over_cap & F.col("strategy").isin(*UNCAPPED)
-    ).select("key", "strategy")
+    def sides(df: DataFrame, *cols: str) -> DataFrame:
+        s = df.filter(F.col("is_src")).select(
+            *cols, F.col("entity_id").alias("src_id"))
+        d = df.filter(~F.col("is_src")).select(
+            *cols, F.col("entity_id").alias("dst_id"))
+        return s.join(d, list(cols)).select("src_id", "dst_id")
 
-    sk_kept = sk.join(F.broadcast(kept), ["key", "strategy"])
-    dk_kept = dk.join(F.broadcast(kept), ["key", "strategy"])
-    pairs = sk_kept.join(dk_kept, ["key", "strategy"]).select("src_id", "dst_id")
-
+    pairs = sides(counted.filter(~over_cap), "key", "strategy")
     # rank-zip the oversized exact-tier blocks
-    from pyspark.sql import Window
-
-    sk_hot = sk.join(F.broadcast(hot_exact), ["key", "strategy"]).join(s_uri, "src_id")
-    dk_hot = dk.join(F.broadcast(hot_exact), ["key", "strategy"]).join(d_uri, "dst_id")
-    ws = Window.partitionBy("key", "strategy").orderBy("s_uri")
-    wd = Window.partitionBy("key", "strategy").orderBy("d_uri")
-    zipped = (
-        sk_hot.withColumn("rnk", F.row_number().over(ws))
-        .select("key", "strategy", "rnk", "src_id")
-        .join(
-            dk_hot.withColumn("rnk", F.row_number().over(wd)).select(
-                "key", "strategy", "rnk", "dst_id"
-            ),
-            ["key", "strategy", "rnk"],
-        )
-        .select("src_id", "dst_id")
-    )
+    hot = counted.filter(over_cap & F.col("strategy").isin(*UNCAPPED))
+    ranked = hot.withColumn("rnk", F.row_number().over(
+        Window.partitionBy("key", "strategy", "is_src").orderBy("uri")))
+    zipped = sides(ranked, "key", "strategy", "rnk")
     return pairs.unionByName(zipped).dropDuplicates(["src_id", "dst_id"])
 
 

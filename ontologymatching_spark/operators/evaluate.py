@@ -33,8 +33,9 @@ def disagreement_variance(pairs: DataFrame, sim_cols: list[str],
 def global_confidence(weights: DataFrame, quality_col: str = "quality") -> float:
     """GlobalConfidenceQuality (qualityEvaluation/metrics/
     GlobalConfidenceQuality.java:30-62): the matcher-level scalar quality =
-    average of the per-row local confidences (which
-    matchers.local_confidence_weights computes)."""
+    average of the per-row local confidences in ``weights`` (one
+    LocalConfidenceQuality per source row, 1 - avg(non-best sims): the
+    weights ``matchers.lwc_quality_weighted`` applies)."""
     row = weights.agg(F.avg(quality_col).alias("g")).collect()[0]
     return float(row.g) if row.g is not None else 0.0
 

@@ -340,7 +340,6 @@ def iism(
     pairs: DataFrame,
     src_parents: DataFrame,
     dst_parents: DataFrame,
-    alignment_seed: DataFrame | None = None,
     parent_thr: float = 0.6,
     boost: float = 0.15,
     rounds: int = 2,
@@ -374,149 +373,116 @@ def iism(
     straight into the matrix; rd_thr/use_thr/pv_thr mirror
     getRangeDomainThreshold / property usage / getPropertyValuesThreshold).
 
-    ``alignment_seed`` (optional) is a prior accepted alignment; when absent
-    the over-threshold pairs of the current round seed the rules, iterated
-    ``rounds`` times (the reference's fixpoint driver with a bound)."""
-    cur = pairs.select("src_id", "dst_id", F.col("sim").alias("sim_iism"))
+    The pairs at or above ``parent_thr`` at the start of a round seed that
+    round's rules, iterated ``rounds`` times (the reference's fixpoint
+    driver with a bound).
+
+    Parents do not depend on sim, so each pair is carried as one row per
+    (s_parent, d_parent) combination of its parents (null where an entity
+    has none), built once. A round's parent flag is one left join of the
+    accepted pairs on (s_parent, d_parent), its sibling flag a count of
+    accepted rows over the parent family, and a pair takes each flag's max
+    over its rows."""
+    ids = ["src_id", "dst_id"]
+    fam = ["s_parent", "d_parent"]
     sp = src_parents.select(
         F.col("child_id").alias("src_id"), F.col("parent_id").alias("s_parent")
     )
     dp = dst_parents.select(
         F.col("child_id").alias("dst_id"), F.col("parent_id").alias("d_parent")
     )
+    cur = (
+        pairs.select(*ids, "sim", F.col("sim").alias("sim_iism"))
+        .join(sp, "src_id", "left")
+        .join(dp, "dst_id", "left")
+    )
+    by_family = Window.partitionBy(*fam)
+    by_pair = Window.partitionBy(*ids)
+    has_parents = F.col("s_parent").isNotNull() & F.col("d_parent").isNotNull()
+    pair_rules = any(t is not None for t in (
+        src_sig, src_usage, src_values, src_subs, src_unions))
+
+    def boosted(df: DataFrame, flag, b: float) -> DataFrame:
+        return df.withColumn(
+            "sim_iism", _boost(F.col("sim_iism"), flag, b)
+        ).select(*ids, "sim_iism")
 
     for _ in range(rounds):
-        accepted = (
-            alignment_seed.select("src_id", "dst_id")
-            if alignment_seed is not None
-            else cur.filter(F.col("sim_iism") >= parent_thr).select(
-                "src_id", "dst_id"
-            )
-        )
+        ok = F.col("sim_iism") >= parent_thr
+        accepted = cur.filter(ok).select(*ids).distinct()
         acc_parents = accepted.select(
-            F.col("src_id").alias("s_parent"), F.col("dst_id").alias("d_parent")
-        ).withColumn("parents_aligned", F.lit(True))
-
-        # parent rule
-        with_parents = (
-            cur.join(sp, "src_id", "left")
-            .join(dp, "dst_id", "left")
-            .join(acc_parents, ["s_parent", "d_parent"], "left")
-            .groupBy("src_id", "dst_id")
-            .agg(
-                F.first("sim_iism").alias("sim_iism"),
-                F.max(F.coalesce(F.col("parents_aligned"), F.lit(False))).alias(
-                    "pa"
-                ),
-            )
-            .withColumn("sim_iism", _boost(F.col("sim_iism"), F.col("pa"), boost))
-            .drop("pa")
+            F.col("src_id").alias("s_parent"), F.col("dst_id").alias("d_parent"),
+            F.lit(True).alias("pa"),
         )
-
-        # sibling rule: count aligned pairs per parent family; >=2 → boost all
-        fam = (
-            accepted.join(sp, "src_id").join(dp, "dst_id")
-            .groupBy("s_parent", "d_parent")
-            .agg(F.count("*").alias("n_aligned"))
-            .filter(F.col("n_aligned") >= 2)
-            .withColumn("family_strong", F.lit(True))
-            .select("s_parent", "d_parent", "family_strong")
-        )
+        # parent rule: the pair's parents are aligned; sibling rule: >=2
+        # aligned pairs in the parent family boost all of its pairs
+        pa = F.coalesce(F.col("pa"), F.lit(False))
+        fs = has_parents & (F.count(F.when(ok, 1)).over(by_family) >= 2)
         cur = (
-            with_parents.join(sp, "src_id", "left")
-            .join(dp, "dst_id", "left")
-            .join(fam, ["s_parent", "d_parent"], "left")
-            .groupBy("src_id", "dst_id")
-            .agg(
-                F.first("sim_iism").alias("sim_iism"),
-                F.max(F.coalesce(F.col("family_strong"), F.lit(False))).alias(
-                    "fs"
-                ),
-            )
-            .withColumn(
-                "sim_iism", _boost(F.col("sim_iism"), F.col("fs"), boost / 2)
-            )
-            .drop("fs")
+            cur.join(acc_parents, fam, "left")
+            .withColumn("fs", fs)
+            .withColumn("pa", F.max(pa).over(by_pair))
+            .withColumn("fs", F.max("fs").over(by_pair))
+            .withColumn("sim_iism", _boost(
+                _boost(F.col("sim_iism"), F.col("pa"), boost),
+                F.col("fs"), boost / 2,
+            ))
+            .drop("pa", "fs")
         )
+        if pair_rules:
+            # the optional rules read and write one row per pair
+            pair = cur.select(*ids, "sim_iism").dropDuplicates(ids)
 
-        # range/domain rule
-        if src_sig is not None and dst_sig is not None:
-            ad = (
-                aligned_domains
-                if aligned_domains is not None
-                else accepted.select(
-                    F.col("src_id").alias("s_domain"),
-                    F.col("dst_id").alias("d_domain"),
+            # range/domain rule
+            if src_sig is not None and dst_sig is not None:
+                ad = (
+                    aligned_domains
+                    if aligned_domains is not None
+                    else accepted.select(
+                        F.col("src_id").alias("s_domain"),
+                        F.col("dst_id").alias("d_domain"),
+                    )
                 )
-            )
-            cur = range_domain_sim(
-                cur.withColumnRenamed("sim_iism", "sim"), src_sig, dst_sig, ad
-            )
-            cur = cur.withColumn(
-                "sim", _boost(F.col("sim"), F.col("sim_rd") >= rd_thr, boost)
-            ).select("src_id", "dst_id", F.col("sim").alias("sim_iism"))
+                pair = boosted(range_domain_sim(pair, src_sig, dst_sig, ad),
+                               F.col("sim_rd") >= rd_thr, boost)
 
-        # usage rule
-        if src_usage is not None and dst_usage is not None:
-            cur = usage_sim(
-                cur.withColumnRenamed("sim_iism", "sim"),
-                src_usage, dst_usage, accepted,
-            )
-            cur = cur.withColumn(
-                "sim", _boost(F.col("sim"), F.col("sim_use") >= use_thr, boost)
-            ).select("src_id", "dst_id", F.col("sim").alias("sim_iism"))
+            # usage rule
+            if src_usage is not None and dst_usage is not None:
+                pair = boosted(usage_sim(pair, src_usage, dst_usage, accepted),
+                               F.col("sim_use") >= use_thr, boost)
 
-        # values rule
-        if src_values is not None and dst_values is not None:
-            cur = values_sim(
-                cur.withColumnRenamed("sim_iism", "sim"), src_values, dst_values
-            )
-            cur = cur.withColumn(
-                "sim", _boost(F.col("sim"), F.col("sim_pv") >= pv_thr, boost)
-            ).select("src_id", "dst_id", F.col("sim").alias("sim_iism"))
+            # values rule
+            if src_values is not None and dst_values is not None:
+                pair = boosted(values_sim(pair, src_values, dst_values),
+                               F.col("sim_pv") >= pv_thr, boost)
 
-        # subproperties rule (certainty rule — the reference writes 1.0)
-        if src_subs is not None and dst_subs is not None:
-            new_sub = subproperty_alignments(
-                cur, src_subs, dst_subs, prop_thr=sub_thr, sim_col="sim_iism"
-            ).withColumn("sub_rule", F.lit(True))
-            cur = (
-                cur.join(new_sub, ["src_id", "dst_id"], "left")
-                .withColumn(
-                    "sim_iism",
-                    _boost(
-                        F.col("sim_iism"),
-                        F.coalesce(F.col("sub_rule"), F.lit(False)),
-                        certainty_boost,
-                    ),
+            # subproperties rule (certainty rule — the reference writes 1.0)
+            if src_subs is not None and dst_subs is not None:
+                new_sub = subproperty_alignments(
+                    pair, src_subs, dst_subs, prop_thr=sub_thr,
+                    sim_col="sim_iism",
+                ).withColumn("sub_rule", F.lit(True))
+                pair = boosted(
+                    pair.join(new_sub, ids, "left"),
+                    F.coalesce(F.col("sub_rule"), F.lit(False)),
+                    certainty_boost,
                 )
-                .drop("sub_rule")
-            )
 
-        # unionclasses rule (certainty rule). Both certainty rules boost
-        # candidate pairs already present in the sparse pair table — the
-        # reference writes arbitrary matrix cells; a blocked pair table
-        # only carries candidate cells (documented deviation: recall of
-        # the blocking stage bounds which cells exist).
-        if src_unions is not None and dst_unions is not None:
-            new_un = union_class_alignments(
-                cur, src_unions, dst_unions, strong_thr=union_strong,
-                weak_thr=union_weak, sim_col="sim_iism",
-            ).withColumn("union_rule", F.lit(True))
-            cur = (
-                cur.join(new_un, ["src_id", "dst_id"], "left")
-                .withColumn(
-                    "sim_iism",
-                    _boost(
-                        F.col("sim_iism"),
-                        F.coalesce(F.col("union_rule"), F.lit(False)),
-                        certainty_boost,
-                    ),
+            # unionclasses rule (certainty rule). Both certainty rules boost
+            # candidate pairs already present in the sparse pair table — the
+            # reference writes arbitrary matrix cells; a blocked pair table
+            # only carries candidate cells (documented deviation: recall of
+            # the blocking stage bounds which cells exist).
+            if src_unions is not None and dst_unions is not None:
+                new_un = union_class_alignments(
+                    pair, src_unions, dst_unions, strong_thr=union_strong,
+                    weak_thr=union_weak, sim_col="sim_iism",
+                ).withColumn("union_rule", F.lit(True))
+                pair = boosted(
+                    pair.join(new_un, ids, "left"),
+                    F.coalesce(F.col("union_rule"), F.lit(False)),
+                    certainty_boost,
                 )
-                .drop("union_rule")
-            )
-
+            cur = cur.drop("sim_iism").join(pair, ids)
         cur = cur.localCheckpoint()
-    return pairs.join(cur, ["src_id", "dst_id"]).select(
-        "src_id", "dst_id", "sim", "sim_iism"
-    )
+    return cur.dropDuplicates(ids).select(*ids, "sim", "sim_iism")

@@ -7,7 +7,7 @@ threshold-at-fill IS the AggregativeSparseMatrix, AbstractMatcher.java:504-505).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import spark_sims as S
@@ -141,63 +141,58 @@ def psm(pairs_f: DataFrame,
 # ---------------------------------------------------------------------------
 # VMM — TF-IDF cosine over virtual documents (MultiWordsMatcher.java:103-176,
 # 469-479). Corpus = union of BOTH sides' docs (corpus build :122-149).
-# Sparse join-based cosine — the dense matrix never exists.
+# Sparse per-pair cosine — the dense matrix never exists.
 # ---------------------------------------------------------------------------
 
 
-def tfidf_weights(docs: DataFrame) -> DataFrame:
-    """docs(doc_id, doc_tokens) → (doc_id, term, w) with w = tf * ln(N/df),
-    plus an L2 norm per doc folded in downstream. Two-phase aggregation,
-    map-side combine free via groupBy."""
-    n_docs = docs.count()
-    terms = docs.select(
-        "doc_id", F.explode("doc_tokens").alias("term")
-    ).filter(F.length("term") > 0)
-    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    df = terms.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
-    w = (
-        tf.join(df, "term")
-        .withColumn("w", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")))
-        .select("doc_id", "term", "w")
-    )
-    return w
-
-
 def vmm(pairs: DataFrame, src: DataFrame, dst: DataFrame) -> DataFrame:
-    """→ (src_id, dst_id, sim_vmm). Cosine over sparse TF-IDF vectors via a
-    term-level join restricted to candidate pairs (never all-pairs)."""
-    s_docs = src.select(F.col("entity_id").alias("doc_id"), "doc_tokens")
-    d_docs = dst.select(F.col("entity_id").alias("doc_id"), "doc_tokens")
-    corpus = s_docs.unionByName(d_docs)
-    w = tfidf_weights(corpus)
-
-    norms = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
-
-    sw = w.select(F.col("doc_id").alias("src_id"), "term", F.col("w").alias("sw"))
-    dw = w.select(F.col("doc_id").alias("dst_id"), "term", F.col("w").alias("dw"))
-
-    dots = (
-        pairs.join(sw, "src_id")
-        .join(dw, ["dst_id", "term"])
-        .groupBy("src_id", "dst_id")
-        .agg(F.sum(F.col("sw") * F.col("dw")).alias("dot"))
+    """→ (src_id, dst_id, sim_vmm). ``doc_tokens`` are distinct
+    (``with_virtual_doc``), so tf ≡ 1 and a term's weight is
+    w(t) = ln(N/df(t)), N = docs in the corpus. Each doc becomes one
+    term → w map and an L2 norm; per pair,
+    sim = Σ_{t ∈ s ∩ d} s_w[t]·d_w[t] / (s_nrm·d_nrm), 0 when no term is
+    shared or a norm is 0. Norm and dot sum in sorted term order, so the
+    result does not depend on partitioning."""
+    docs = src.select("entity_id", "doc_tokens").unionByName(
+        dst.select("entity_id", "doc_tokens"))
+    terms = docs.select(
+        "entity_id", F.explode("doc_tokens").alias("term")
+    ).filter(F.length("term") > 0)
+    n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n"))
+    idf = (
+        terms.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        .crossJoin(n_docs)
+        .select("term", F.log(F.col("n") / F.col("df")).alias("w"))
     )
-    sn = norms.select(F.col("doc_id").alias("src_id"), F.col("nrm").alias("s_nrm"))
-    dn = norms.select(F.col("doc_id").alias("dst_id"), F.col("nrm").alias("d_nrm"))
-    out = (
-        pairs.join(dots, ["src_id", "dst_id"], "left")
-        .join(sn, "src_id", "left")
-        .join(dn, "dst_id", "left")
-        .withColumn(
-            "sim_vmm",
-            F.when(
-                F.col("dot").isNotNull() & (F.col("s_nrm") > 0) & (F.col("d_nrm") > 0),
-                F.col("dot") / (F.col("s_nrm") * F.col("d_nrm")),
-            ).otherwise(F.lit(0.0)),
+    vec = terms.join(idf, "term").groupBy("entity_id").agg(
+        F.array_sort(F.collect_list(F.struct("term", "w"))).alias("vec"))
+    vec = vec.select(
+        "entity_id",
+        F.map_from_entries("vec").alias("wmap"),
+        F.sqrt(F.aggregate("vec", F.lit(0.0),
+                           lambda a, x: a + x["w"] * x["w"])).alias("nrm"),
+    )
+
+    def side(p: str, id_col: str) -> DataFrame:
+        return vec.select(F.col("entity_id").alias(id_col),
+                          F.col("wmap").alias(f"{p}_w"),
+                          F.col("nrm").alias(f"{p}_nrm"))
+
+    # map_zip_with runs over s's keys in order, then d's others (null there)
+    prods = F.map_values(F.map_zip_with("s_w", "d_w", lambda _, a, b: a * b))
+    dot = F.aggregate(prods, F.lit(0.0),
+                      lambda acc, x: acc + F.coalesce(x, F.lit(0.0)))
+    return (
+        pairs.select("src_id", "dst_id")
+        .join(side("s", "src_id"), "src_id", "left")
+        .join(side("d", "dst_id"), "dst_id", "left")
+        .select(
+            "src_id", "dst_id",
+            F.when((F.col("s_nrm") > 0) & (F.col("d_nrm") > 0),
+                   dot / (F.col("s_nrm") * F.col("d_nrm")))
+            .otherwise(F.lit(0.0)).alias("sim_vmm"),
         )
-        .select("src_id", "dst_id", "sim_vmm")
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -230,40 +225,25 @@ def lwc_sigmoid_average(pairs_sims: DataFrame, sim_cols: list[str]) -> DataFrame
     return pairs_sims.withColumn("sim", expr)
 
 
-def local_confidence_weights(pairs_sims: DataFrame, sim_col: str,
-                             by: str = "src_id") -> DataFrame:
-    """LocalConfidenceQuality (qualityEvaluation/metrics/LocalConfidenceQuality
-    .java:32-119): per-row confidence = 1 - avg(non-best sims). High when the
-    best candidate stands out. → (by, quality)."""
-    agg = pairs_sims.groupBy(by).agg(
-        F.sum(sim_col).alias("s"), F.max(sim_col).alias("m"), F.count("*").alias("n")
-    )
-    return agg.withColumn(
-        "quality",
-        F.when(F.col("n") > 1, 1.0 - (F.col("s") - F.col("m")) / (F.col("n") - 1))
-        .otherwise(F.lit(1.0)),
-    ).select(by, "quality")
-
-
 def lwc_quality_weighted(pairs_sims: DataFrame, sim_cols: list[str]) -> DataFrame:
     """Quality-weighted average: each matcher's sim is weighted by its
-    per-source-row local confidence."""
-    out = pairs_sims
-    qcols = []
-    for c in sim_cols:
-        q = local_confidence_weights(pairs_sims.select("src_id", "dst_id", c), c)
-        q = q.withColumnRenamed("quality", f"q_{c}")
-        out = out.join(q, "src_id", "left")
-        qcols.append(f"q_{c}")
-    num = sum(
-        (F.coalesce(F.col(c), F.lit(0.0)) * F.coalesce(F.col(q), F.lit(1.0))
-         for c, q in zip(sim_cols, qcols)),
-        F.lit(0.0),
-    )
-    den = sum((F.coalesce(F.col(q), F.lit(1.0)) for q in qcols), F.lit(0.0))
-    return out.withColumn(
-        "sim", F.when(den > 0, num / den).otherwise(F.lit(0.0))
-    ).drop(*qcols)
+    per-source-row local confidence, LocalConfidenceQuality
+    (qualityEvaluation/metrics/LocalConfidenceQuality.java:32-119):
+    1 - avg(non-best sims), high when the best candidate stands out. Every
+    matcher's confidence is a window over the same source row, so the pair
+    plan runs once (a group-by joined back would run it twice)."""
+    row = Window.partitionBy("src_id")
+    n = F.count(F.lit(1)).over(row)
+    qcols = [
+        F.when(n > 1, 1.0 - (F.sum(c).over(row) - F.max(c).over(row)) / (n - 1))
+        .otherwise(F.lit(1.0))
+        for c in sim_cols
+    ]
+    num = sum((F.coalesce(F.col(c), F.lit(0.0)) * F.coalesce(q, F.lit(1.0))
+               for c, q in zip(sim_cols, qcols)), F.lit(0.0))
+    den = sum((F.coalesce(q, F.lit(1.0)) for q in qcols), F.lit(0.0))
+    return pairs_sims.withColumn(
+        "sim", F.when(den > 0, num / den).otherwise(F.lit(0.0)))
 
 
 # ---------------------------------------------------------------------------

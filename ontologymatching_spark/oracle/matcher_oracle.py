@@ -105,6 +105,31 @@ def _psm(s, d, w_local=0.33, w_label=0.34, w_doc=0.33) -> float:
     return sum(x * w for x, w in zip(sims, weights)) / total
 
 
+def tfidf_vectors(docs: list[list[str]]) -> list[dict[str, float]]:
+    """One TF-IDF vector per doc, w = tf * ln(N/df), N = len(docs)."""
+    n_docs = len(docs)
+    df_counter: Counter = Counter()
+    for toks in docs:
+        df_counter.update(set(toks))
+    return [
+        {t: c * math.log(n_docs / df_counter[t])
+         for t, c in Counter(toks).items()}
+        for toks in docs
+    ]
+
+
+def cosine(v1: dict, v2: dict) -> float:
+    """Cosine of two sparse vectors; 0 when either norm is 0."""
+    if len(v2) < len(v1):
+        v1, v2 = v2, v1
+    dot = sum(w * v2.get(t, 0.0) for t, w in v1.items())
+    n1 = math.sqrt(sum(w * w for w in v1.values()))
+    n2 = math.sqrt(sum(w * w for w in v2.values()))
+    if n1 == 0 or n2 == 0:
+        return 0.0
+    return dot / (n1 * n2)
+
+
 def match_oracle(
     src_files_src: pd.DataFrame,
     src_files_dst: pd.DataFrame,
@@ -116,30 +141,8 @@ def match_oracle(
     dst = _prep(extract_entities_pd(src_files_dst))
 
     # TF-IDF corpus over BOTH sides (MultiWordsMatcher.java:122-149)
-    docs = list(src["doc_tokens"]) + list(dst["doc_tokens"])
-    n_docs = len(docs)
-    df_counter: Counter = Counter()
-    for toks in docs:
-        df_counter.update(set(toks))
-
-    def tfidf_vec(toks: list[str]) -> dict[str, float]:
-        tf = Counter(toks)
-        return {
-            t: c * math.log(n_docs / df_counter[t]) for t, c in tf.items()
-        }
-
-    src_vecs = [tfidf_vec(t) for t in src["doc_tokens"]]
-    dst_vecs = [tfidf_vec(t) for t in dst["doc_tokens"]]
-
-    def cosine(v1: dict, v2: dict) -> float:
-        if len(v2) < len(v1):
-            v1, v2 = v2, v1
-        dot = sum(w * v2.get(t, 0.0) for t, w in v1.items())
-        n1 = math.sqrt(sum(w * w for w in v1.values()))
-        n2 = math.sqrt(sum(w * w for w in v2.values()))
-        if n1 == 0 or n2 == 0:
-            return 0.0
-        return dot / (n1 * n2)
+    vecs = tfidf_vectors(list(src["doc_tokens"]) + list(dst["doc_tokens"]))
+    src_vecs, dst_vecs = vecs[: len(src)], vecs[len(src):]
 
     # full cartesian per kind — the reference's alignNodesOneByOne
     pairs = []

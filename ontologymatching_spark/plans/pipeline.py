@@ -103,7 +103,10 @@ def config_fingerprint(cfg: "PipelineConfig") -> str:
             "max_block_pairs": MAX_BLOCK_PAIRS,
             "combination": cfg.combination,
             "topk_guard": TOPK_GUARD,
-            "structural_boost": cfg.structural_boost,
+            # True and "dsi" select the same DSI plan
+            "structural_boost": (
+                "dsi" if cfg.structural_boost is True else cfg.structural_boost
+            ),
             "dsi_mcp": DSI_MCP,
         },
         sort_keys=True,
@@ -113,9 +116,9 @@ def config_fingerprint(cfg: "PipelineConfig") -> str:
 
 def combine_scores(pf: DataFrame, cfg: "PipelineConfig") -> DataFrame:
     """(src_id, dst_id, src_uri, dst_uri, sim_bsm, sim_psm, sim_vmm) →
-    + combined ``sim`` rounded to 12 decimals (TF-IDF partial-sum order
-    varies with partitioning by ~1 ULP; rounding makes selection tie-breaks
-    bit-stable across parallelism levels, SURVEY.md §4(d))."""
+    + combined ``sim`` rounded to 12 decimals (LWC's per-source sums run
+    in partition order and vary by ~1 ULP; rounding makes selection
+    tie-breaks bit-stable across parallelism levels, SURVEY.md §4(d))."""
     sim_cols = ["sim_bsm", "sim_psm", "sim_vmm"]
     if cfg.combination == "lwc":
         pf = matchers.lwc_quality_weighted(pf, sim_cols)
@@ -200,10 +203,12 @@ def with_content_sha(src_files: DataFrame) -> DataFrame:
 
 
 def prev_lineage(prev: CheckpointStore) -> DataFrame:
-    """Distinct (repo, path, content_sha256) the previous run observed.
-    Every parsed file emits its module's hasName/hasKind triples, so
-    ``triples`` carries the lineage of every file."""
-    return prev.read("triples").select(*LINEAGE).dropDuplicates(LINEAGE)
+    """Distinct (repo, path, content_sha256) the previous run observed:
+    every parsed file has exactly one module entity, so the ``prepared``
+    module rows are one lineage row per file, with no shuffle."""
+    return prev.read("prepared").filter(F.col("kind") == "module").select(
+        *LINEAGE
+    )
 
 
 class KGPipeline:

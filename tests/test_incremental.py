@@ -192,3 +192,39 @@ def test_incremental_lineage_survives(spark, corpora):
         v2df.select("repo", "path", "sha"), ["repo", "path"]
     ).filter(F.col("content_sha256") != F.col("sha"))
     assert bad.count() == 0
+
+
+def test_prev_lineage_is_one_row_per_file(spark, monkeypatch):
+    """``prev_lineage`` reads the previous run's module entities: one
+    (repo, path, content_sha256) row per parsed file, equal to the
+    distinct lineage of its triples, for the generator corpus plus a
+    module with no declarations and an xml file."""
+    import hashlib
+
+    import pandas as pd
+
+    from ontologymatching_spark.plans.pipeline import LINEAGE, prev_lineage
+
+    v1, _ = generate_corpus(n_repos=4, files_per_repo=3, seed=11)
+    xml = ('<module name="mod9">\n  <import module="other.mod"/>\n'
+           '  <class name="FooBar"/>\n</module>\n')
+    files = pd.concat([v1, pd.DataFrame([
+        {"repo": "org0000/x", "path": "src/empty/bare.py", "commit": "c0",
+         "lang": "python", "content": "import os\n\n"},
+        {"repo": "org0001/x", "path": "onto/mod9.xml", "commit": "c1",
+         "lang": "xml", "content": xml},
+    ])], ignore_index=True)
+    store = CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_lin_"))
+    # commit triples and prepared only: prev_lineage reads nothing else
+    monkeypatch.setenv("KG_FAIL_BEFORE_STAGE", "candidate_pairs")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        KGPipeline(spark, store).run(spark.createDataFrame(files))
+
+    got = _rows(prev_lineage(store), LINEAGE)
+    want = sorted(
+        (r.repo, r.path, hashlib.sha256(r.content.encode()).hexdigest())
+        for r in files.itertuples()
+    )
+    assert got == want
+    assert got == _rows(
+        store.read("triples").select(*LINEAGE).dropDuplicates(), LINEAGE)

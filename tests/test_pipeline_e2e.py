@@ -195,6 +195,15 @@ def test_config_fingerprint_pinned(config, digest):
     assert config_fingerprint(PipelineConfig(**config)) == digest
 
 
+def test_dsi_spellings_fingerprint_equal():
+    """``True`` and ``"dsi"`` select the same DSI plan, so a store built
+    under one is a valid ``prev`` for the other."""
+    def fp(boost):
+        return config_fingerprint(PipelineConfig(structural_boost=boost))
+
+    assert fp(True) == fp("dsi") != fp(False)
+
+
 @pytest.mark.parametrize("config, field", [
     ({"combination": "LWC"}, "combination"),
     ({"combination": "max"}, "combination"),
@@ -313,3 +322,111 @@ def test_side_from_column_or_clear_error(spark):
         KGPipeline(
             spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kg_bad_"))
         ).run(spark.createDataFrame(team.drop(columns="side")))
+
+
+# ---------------------------------------------------------------------------
+# blocking and VMM over the e2e build's prepared entities
+# ---------------------------------------------------------------------------
+
+
+def _matchable_sides(spark, store, extra=()):
+    """The build's matchable src/dst entities, plus ``extra`` hand-made
+    function entities given as (entity_id, side, name)."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from ontologymatching_spark.functions.textnorm import normalize
+
+    cols = ["entity_id", "uri", "kind", "norm_name", "nodigit_name",
+            "doc_tokens", "side"]
+    m = store.read("prepared").filter(
+        F.col("kind").isin("class", "function")).select(*cols)
+    if extra:
+        m = m.unionByName(spark.createDataFrame(pd.DataFrame([
+            {"entity_id": i, "uri": f"extra/{side}/{name}", "kind": "function",
+             "norm_name": normalize(name),
+             "nodigit_name": normalize(name, stem=True, strip_digits=True),
+             "doc_tokens": sorted(set(normalize(name).split(" "))),
+             "side": side}
+            for i, side, name in extra
+        ]), m.schema))
+    return m.filter(F.col("side") == "src"), m.filter(F.col("side") == "dst")
+
+
+def _blocking_pd(src, dst, cap):
+    """Pandas restatement of ``blocking.candidate_pairs`` → (pairs, number
+    of rank-zipped pairs)."""
+    def keys(e):
+        out = {}
+        for r in e.itertuples():
+            ks = [("exact", r.norm_name),
+                  ("tier4", " ".join(sorted(r.nodigit_name.split(" "))))]
+            if len(r.norm_name.split(" ")) > 1:
+                ks += [("token", t) for t in set(r.nodigit_name.split(" ")) if t]
+            elif len(r.norm_name) >= 4:
+                ks.append(("prefix", r.norm_name.replace(" ", "")[:4]))
+            for strategy, k in ks:
+                out.setdefault((f"{r.kind}|{k}", strategy), []).append(
+                    (r.uri, r.entity_id))
+        return out
+
+    sk, dk = keys(src), keys(dst)
+    pairs, zipped = set(), set()
+    for block, s in sk.items():
+        d = dk.get(block, [])
+        if len(s) * len(d) <= cap:
+            pairs |= {(a, b) for _, a in s for _, b in d}
+        elif block[1] in ("exact", "tier4"):
+            zipped |= {(a, b) for (_, a), (_, b) in zip(sorted(s), sorted(d))}
+    return pairs | zipped, len(zipped)
+
+
+@pytest.mark.parametrize("cap", [3, 10_000])
+def test_candidate_pairs_match_pandas_restatement(spark, e2e, cap):
+    """Exact, tier4, token (multi-token names, each distinct token once)
+    and prefix (single-token names of 4+ chars) keys, the per-block cap
+    and the rank-zip of oversized exact/tier4 blocks, against a pandas
+    restatement. Cap 3 forces the rank-zip. The repeated token of
+    'zork_zork_quux' counts once: counted twice, its 'zork' block would
+    be 2x3 > 3 and drop the pair with 'zork_plugh'."""
+    from ontologymatching_spark.operators import blocking
+
+    extra = [(-1, "src", "zork_zork_quux"), (-2, "dst", "zork_plugh"),
+             (-3, "dst", "zork_zork_xyzzy")]
+    s, d = _matchable_sides(spark, e2e[2], extra)
+    got = {tuple(r) for r in blocking.candidate_pairs(s, d, cap).collect()}
+    want, n_zipped = _blocking_pd(s.toPandas(), d.toPandas(), cap)
+    assert got == want
+    assert (-1, -2) in got
+    assert (n_zipped > 0) == (cap == 3)
+
+
+def test_vmm_matches_oracle_and_partitioning(spark, e2e):
+    """``sim_vmm`` equals the oracle's TF-IDF cosine (corpus = both sides'
+    docs) within 1e-12, and is bit-identical whether its inputs come in
+    1 or 7 partitions."""
+    from ontologymatching_spark.operators import blocking
+    from ontologymatching_spark.operators.matchers import vmm
+    from ontologymatching_spark.oracle.matcher_oracle import (
+        cosine, tfidf_vectors,
+    )
+
+    s, d = _matchable_sides(spark, e2e[2])
+    pairs = blocking.candidate_pairs(s, d)
+    got = {(r.src_id, r.dst_id): r.sim_vmm
+           for r in vmm(pairs, s, d).collect()}
+    docs = s.unionByName(d).select("entity_id", "doc_tokens").toPandas()
+    vecs = dict(zip(docs.entity_id, tfidf_vectors(
+        [[t for t in toks if t] for toks in docs.doc_tokens])))
+    assert len(got) == pairs.count() > 1000
+    assert sum(v > 0 for v in got.values()) > len(got) // 2
+    for (a, b), sim in got.items():
+        assert abs(sim - cosine(vecs[a], vecs[b])) <= 1e-12, (a, b)
+
+    def parted(n):
+        return sorted(tuple(r) for r in vmm(
+            pairs.repartition(n), s.repartition(n), d.repartition(n)
+        ).collect())
+
+    assert parted(1) == parted(7) == sorted(
+        (a, b, sim) for (a, b), sim in got.items())
