@@ -32,7 +32,9 @@ def main() -> None:
     ap.add_argument("--src", help="src_files table path (parquet)")
     ap.add_argument("--checkpoints", required=True)
     ap.add_argument("--threshold", type=float, default=0.6)
-    ap.add_argument("--structural-boost", action="store_true")
+    ap.add_argument("--structural-boost", action="store_const",
+                    const="iism", default=False,
+                    help="refine the combined scores with IISM")
     ap.add_argument("--synthetic", nargs=2, type=int, metavar=("REPOS", "FPR"),
                     help="generate a synthetic corpus instead of --src")
     ap.add_argument("--master", default=None)

@@ -31,7 +31,9 @@ def main() -> None:
     ap.add_argument("--events", required=True)
     ap.add_argument("--work", required=True)
     ap.add_argument("--threshold", type=float, default=0.6)
-    ap.add_argument("--structural-boost", action="store_true")
+    ap.add_argument("--structural-boost", action="store_const",
+                    const="iism", default=False,
+                    help="refine the combined scores with IISM")
     ap.add_argument("--max-files-per-trigger", type=int, default=1)
     ap.add_argument("--follow", action="store_true",
                     help="run a continuous query instead of draining")

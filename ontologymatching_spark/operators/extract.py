@@ -22,7 +22,7 @@ import re
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     StringType,
@@ -170,12 +170,21 @@ def entities_from_triples(triples: DataFrame) -> DataFrame:
     )
 
 
-def with_entity_ids(entities: DataFrame) -> DataFrame:
-    """Stable 63-bit entity id from the URI (deterministic across runs and
+def entity_id_col(uri: Column) -> Column:
+    """Stable 63-bit entity id of a URI (deterministic across runs and
     parallelism levels — the reference's dense `Node.index` is insertion-order
     based, AMNode.java:50-106, which is not reproducible under parallelism;
     a content-derived id is)."""
-    return entities.withColumn(
-        "entity_id",
-        F.conv(F.substring(F.sha2(F.col("uri"), 256), 1, 15), 16, 10).cast("long"),
-    )
+    return F.conv(F.substring(F.sha2(uri, 256), 1, 15), 16, 10).cast("long")
+
+
+def module_id_col() -> Column:
+    """The KG's one containment rule: the id of the module of the row's own
+    file (``module_uri(repo, path)``), which declares every class and
+    function of that file."""
+    return entity_id_col(F.concat_ws("/", "repo", "path"))
+
+
+def with_entity_ids(entities: DataFrame) -> DataFrame:
+    """entities + ``entity_id`` of their ``uri`` (``entity_id_col``)."""
+    return entities.withColumn("entity_id", entity_id_col(F.col("uri")))

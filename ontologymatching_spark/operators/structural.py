@@ -17,34 +17,14 @@
         converge on max-delta. DataFrame self-join loop with localCheckpoint
         per round to cut lineage.
 
-Edges here are (child_id, parent_id, pred) — in the code graft, `declares`
-(module→entity, used inverted as the parent link) and resolved `imports`.
+Parent edges here are (child_id, parent_id). In the KG a class's or
+function's parent is its own file's module (`extract.module_id_col`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def parent_edges_from_triples(triples: DataFrame, entities: DataFrame) -> DataFrame:
-    """declares triples → (child_id, parent_id): entity's parent is its
-    module. Ids resolved through the entities table (uri → entity_id)."""
-    ids = entities.select("uri", "entity_id")
-    decl = triples.filter(F.col("pred") == "declares").select(
-        F.col("subj").alias("parent_uri"), F.col("obj").alias("child_uri")
-    )
-    return (
-        decl.join(ids.withColumnRenamed("uri", "child_uri"), "child_uri")
-        .withColumnRenamed("entity_id", "child_id")
-        .join(
-            ids.withColumnRenamed("uri", "parent_uri").withColumnRenamed(
-                "entity_id", "parent_id"
-            ),
-            "parent_uri",
-        )
-        .select("child_id", "parent_id")
-    )
 
 
 def dsi(

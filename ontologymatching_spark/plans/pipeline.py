@@ -3,12 +3,21 @@ OAEI2011Matcher.java:203-232, re-expressed as checkpointed DataFrame stages):
 
   src_files → extract(triples) → prepare(entities of the triples, norm
     tiers, virtual docs) → block(candidate_pairs) → BSM + PSM + VMM
-    → combine → [DSI | IISM] → select 1-1 → canonicalize → nodes
+    → combine → [IISM] → select 1-1 → canonicalize → nodes
     → links(mentions of the triples) → edges
 
 Each file is parsed once: ``triples`` is the only extraction output, and
 entities and mentions are projections of it computed inside the stages
 that read them.
+
+The KG's one structural relation is containment: a file's module declares
+the file's classes and functions. It is stated once, as a column
+(``extract.module_id_col``), and the IISM parents and the ``declares`` and
+``imports`` edges are projections of entity and mention rows through it,
+never joins of ``triples`` on URIs. Every parent is therefore a module, and
+modules are never matched, so IISM boosts only through its sibling rule; a
+grammar with nested declarations would need real parent edges (and DSI,
+which needs aligned parents to change a score) revisited.
 
 Every stage checkpoints through CheckpointStore (resume-from-snapshot), and
 every row carries lineage (repo, path, commit, content_sha256 + stage name).
@@ -40,7 +49,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import blocking, components, matchers, selection
-from ..operators.extract import entities_from_triples, extract_triples
+from ..operators.extract import (
+    entities_from_triples, extract_triples, module_id_col,
+)
 from ..operators.linking import link_mentions, mentions_from_triples
 from .checkpoint import CheckpointStore
 
@@ -49,7 +60,6 @@ from .checkpoint import CheckpointStore
 # its own key, so the fingerprints of existing stores stay valid.
 MAX_BLOCK_PAIRS = 10_000  # hot-block cap of blocking.candidate_pairs
 TOPK_GUARD = 50  # per-source candidate cap before the 1-1 selection
-DSI_MCP = 0.75  # DSI: weight of a pair's own sim against its parents'
 
 
 @dataclass
@@ -58,8 +68,10 @@ class PipelineConfig:
     combination: str = "average"  # average | lwc
     # optional structural refinement between combine and select
     # (SURVEY.md §7.9 boost stage; off by default — the oracle models the
-    # base ensemble). True/"dsi" → DSI parent blend; "iism" → IISM rule
-    # boosts (the OAEI GENERAL_PURPOSE shape, OAEI2011Matcher.java:209-231).
+    # base ensemble). "iism" → IISM rule boosts (the OAEI GENERAL_PURPOSE
+    # shape, OAEI2011Matcher.java:209-231). The KG's parents are file
+    # modules, which are never matched, so IISM boosts through its sibling
+    # rule only, and a DSI parent blend would change no score.
     structural_boost: bool | str = False
 
     def __post_init__(self):
@@ -68,12 +80,12 @@ class PipelineConfig:
                 f"PipelineConfig.combination={self.combination!r}: "
                 "expected 'average' or 'lwc'"
             )
-        # isinstance: 1 == True, so an ``in`` test would let 1 through
-        if not (isinstance(self.structural_boost, bool)
-                or self.structural_boost in ("dsi", "iism")):
+        # ``is``: 0 == False, so an ``in`` test would let 0 through
+        if not (self.structural_boost is False
+                or self.structural_boost == "iism"):
             raise ValueError(
                 f"PipelineConfig.structural_boost={self.structural_boost!r}: "
-                "expected False, True, 'dsi' or 'iism'"
+                "expected False or 'iism'"
             )
 
 
@@ -103,11 +115,9 @@ def config_fingerprint(cfg: "PipelineConfig") -> str:
             "max_block_pairs": MAX_BLOCK_PAIRS,
             "combination": cfg.combination,
             "topk_guard": TOPK_GUARD,
-            # True and "dsi" select the same DSI plan
-            "structural_boost": (
-                "dsi" if cfg.structural_boost is True else cfg.structural_boost
-            ),
-            "dsi_mcp": DSI_MCP,
+            "structural_boost": cfg.structural_boost,
+            # the retired DSI mode's weight, kept so fingerprints stay valid
+            "dsi_mcp": 0.75,
         },
         sort_keys=True,
     )
@@ -166,32 +176,21 @@ def assign_side(entities: DataFrame, src_files: DataFrame) -> DataFrame:
     return entities.join(sides.select("repo", side.alias("side")), "repo")
 
 
-def apply_structural_boost(scored: DataFrame, triples: DataFrame,
-                           prepared: DataFrame, src_e: DataFrame,
-                           dst_e: DataFrame, cfg: "PipelineConfig") -> DataFrame:
-    """Optional DSI / IISM refinement over the combined scores (SURVEY §7.9;
-    OAEI2011Matcher.java:209-231 GENERAL_PURPOSE shape)."""
+def apply_structural_boost(scored: DataFrame, src_e: DataFrame,
+                           dst_e: DataFrame) -> DataFrame:
+    """IISM refinement over the combined scores (SURVEY §7.9;
+    OAEI2011Matcher.java:209-231 GENERAL_PURPOSE shape). Each side's
+    parents are its entities' own file modules."""
     from ..operators.iism import iism
-    from ..operators.structural import dsi, parent_edges_from_triples
 
-    parents = parent_edges_from_triples(triples, prepared)
-    src_ids = src_e.select("entity_id")
-    sp = parents.join(
-        src_ids, parents.child_id == src_ids.entity_id, "left_semi"
-    )
-    dp = parents.join(
-        dst_e.select("entity_id"),
-        parents.child_id == F.col("entity_id"), "left_semi",
-    )
-    base = scored.select("src_id", "dst_id", "sim")
-    if cfg.structural_boost == "iism":
-        boosted = iism(base, sp, dp).select(
-            "src_id", "dst_id", F.col("sim_iism").alias("sim")
-        )
-    else:  # True / "dsi"
-        boosted = dsi(base, sp, dp, mcp=DSI_MCP).select(
-            "src_id", "dst_id", F.col("sim_dsi").alias("sim")
-        )
+    def parents(e: DataFrame) -> DataFrame:
+        return e.select(F.col("entity_id").alias("child_id"),
+                        module_id_col().alias("parent_id"))
+
+    boosted = iism(
+        scored.select("src_id", "dst_id", "sim"), parents(src_e),
+        parents(dst_e),
+    ).select("src_id", "dst_id", F.col("sim_iism").alias("sim"))
     return scored.drop("sim").join(boosted, ["src_id", "dst_id"])
 
 
@@ -384,10 +383,8 @@ class KGPipeline:
         if cfg.structural_boost:
             scored = st.stage(
                 "scored_boosted",
-                lambda: apply_structural_boost(
-                    scored, triples, prepared, src_e, dst_e, cfg
-                ),
-                inputs=["scored_pairs", "triples"],
+                lambda: apply_structural_boost(scored, src_e, dst_e),
+                inputs=["scored_pairs", "prepared"],
             )
 
         def _aligned():
@@ -422,35 +419,23 @@ class KGPipeline:
         )
 
         def _edges():
-            # declares + resolved-import edges, re-keyed to canonical ids
-            ent_map = nodes.select("uri", "canonical_id")
-            src_map = ent_map.select(
-                F.col("uri").alias("subj"),
-                F.col("canonical_id").alias("src_canonical"),
-            )
-            dst_map = ent_map.select(
-                F.col("uri").alias("obj"),
+            """declares + resolved-import edges between canonical ids. Both
+            start at the module of the row's own file, and a module's
+            canonical id is its entity id: modules are never aligned
+            (matching is kind-gated to classes and functions)."""
+            lineage = ["repo", "path", "commit", "content_sha256"]
+            decl = nodes.filter(F.col("kind") != "module").select(
+                module_id_col().alias("src_canonical"),
                 F.col("canonical_id").alias("dst_canonical"),
+                F.lit("declares").alias("pred"), *lineage,
             )
-            decl = (
-                triples.filter(F.col("pred") == "declares")
-                .join(src_map, "subj")
-                .join(dst_map, "obj")
-                .select(
-                    "src_canonical", "dst_canonical", "pred",
-                    "repo", "path", "commit", "content_sha256",
-                )
-            )
-            ent_canon = nodes.select("entity_id", "canonical_id")
             imp = (
                 mentions.join(links, "mention_id")
-                .join(ent_canon, "entity_id")
-                .join(src_map, F.col("context") == F.col("subj"))
+                .join(nodes.select("entity_id", "canonical_id"), "entity_id")
                 .select(
-                    "src_canonical",
+                    module_id_col().alias("src_canonical"),
                     F.col("canonical_id").alias("dst_canonical"),
-                    F.lit("imports").alias("pred"),
-                    "repo", "path", "commit", "content_sha256",
+                    F.lit("imports").alias("pred"), *lineage,
                 )
             )
             return (

@@ -87,22 +87,6 @@ def test_mid_pipeline_restart(spark, small_corpus, e2e):
     assert out2["alignment"].count() == n_before
 
 
-def test_structural_boost_pipeline(spark, small_corpus):
-    """Optional DSI boost stage runs end-to-end and keeps a valid 1-1
-    alignment (rows-only check — the oracle models the base ensemble)."""
-    import tempfile
-
-    src_files, _ = small_corpus
-    out = KGPipeline(
-        spark,
-        CheckpointStore(spark, tempfile.mkdtemp(prefix="kg_boost_")),
-        PipelineConfig(structural_boost=True),
-    ).run(spark.createDataFrame(src_files))
-    a = out["alignment"].toPandas()
-    assert len(a) > 0
-    assert a["src_id"].is_unique and a["dst_id"].is_unique
-
-
 def test_kill_and_restart(spark, small_corpus):
     """Kill-and-restart (FIXTURES.md §3.9): crash injected between stages —
     restart completes without recomputing the stages finished before the
@@ -185,23 +169,12 @@ def test_iism_boost_pipeline(spark, small_corpus):
     ({}, "2f01d02a38c871fa688a6f3a074b27b0d5fb91037733e28fba7854d882a88125"),
     ({"structural_boost": "iism", "combination": "lwc"},
      "cd0a57f88c3eb596f8fffd0df074b4942104cf211bd986d97a26007d0e97ab6d"),
-    ({"structural_boost": "dsi"},
-     "3b6623256d9594e70d1481faf6926199b22e1212d8b66c120dc403a82e20a905"),
-], ids=["default", "iism_lwc", "dsi"])
+], ids=["default", "iism_lwc"])
 def test_config_fingerprint_pinned(config, digest):
     """The fingerprint a store records must not drift: an update refuses a
     ``prev`` whose fingerprint differs, so a change here voids every
     existing store as a base for updates."""
     assert config_fingerprint(PipelineConfig(**config)) == digest
-
-
-def test_dsi_spellings_fingerprint_equal():
-    """``True`` and ``"dsi"`` select the same DSI plan, so a store built
-    under one is a valid ``prev`` for the other."""
-    def fp(boost):
-        return config_fingerprint(PipelineConfig(structural_boost=boost))
-
-    assert fp(True) == fp("dsi") != fp(False)
 
 
 @pytest.mark.parametrize("config, field", [
@@ -211,6 +184,9 @@ def test_dsi_spellings_fingerprint_equal():
     ({"structural_boost": "IISM"}, "structural_boost"),
     ({"structural_boost": "flood"}, "structural_boost"),
     ({"structural_boost": 1}, "structural_boost"),
+    ({"structural_boost": 0}, "structural_boost"),
+    ({"structural_boost": True}, "structural_boost"),
+    ({"structural_boost": "dsi"}, "structural_boost"),
 ])
 def test_config_rejects_unknown_values(config, field):
     """An unknown combination or structural boost is an error naming the
@@ -228,7 +204,13 @@ def test_canonical_projection_equals_components(spark, config):
     pipeline output (60-file hot-key corpus) that equals the min label of
     the iterative connected components, because the alignment is 1-1
     between disjoint id sets — the projection's precondition, pinned
-    here too."""
+    here too.
+
+    The edges are projections too: each class or function's ``declares``
+    edge and each resolved import start at the module of the row's own
+    file. They must equal the ``triples`` join chain they replace, which
+    holds because every ``declares`` subject is its own file's module and
+    no module is aligned (so its canonical id is its entity id)."""
     from pyspark.sql import functions as F
 
     from ontologymatching_spark.operators import components
@@ -255,6 +237,29 @@ def test_canonical_projection_equals_components(spark, config):
     got = out["nodes"].select("entity_id", "canonical_id").collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(got) == out["entities"].count()
+
+    lineage = ["repo", "path", "commit", "content_sha256"]
+    nodes = out["nodes"].toPandas()
+    canon = dict(zip(nodes["uri"], nodes["canonical_id"]))
+    decl = out["triples"].filter(F.col("pred") == "declares").toPandas()
+    assert (decl["subj"] == decl["repo"] + "/" + decl["path"]).all()
+    modules = set(nodes.loc[nodes["kind"] == "module", "entity_id"])
+    assert not modules & (set(a["src_id"]) | set(a["dst_id"]))
+    imp = (
+        out["mentions"].toPandas()
+        .merge(out["links"].toPandas(), on="mention_id")
+        .merge(nodes[["entity_id", "canonical_id"]], on="entity_id")
+    )
+    want_edges = sorted(
+        [(canon[r.subj], canon[r.obj], "declares",
+          *(getattr(r, c) for c in lineage)) for r in decl.itertuples()]
+        + [(canon[r.context], r.canonical_id, "imports",
+            *(getattr(r, c) for c in lineage)) for r in imp.itertuples()]
+    )
+    got_edges = sorted(map(tuple, out["edges"].select(
+        "src_canonical", "dst_canonical", "pred", *lineage).collect()))
+    assert len(imp) > 0
+    assert got_edges == want_edges
 
 
 def test_store_manifest_rows_and_schema(spark, e2e):

@@ -32,6 +32,7 @@ def prep() -> None:
         entities_from_triples,
         extract_triples,
     )
+    from ontologymatching_spark.plans.pipeline import assign_side
     from ontologymatching_spark.session import get_spark
     from pyspark.sql import functions as F
 
@@ -42,11 +43,9 @@ def prep() -> None:
     sf.write.mode("overwrite").parquet(f"{PREP_DIR}/src_files")
 
     e = matchers.prepare_entities(entities_from_triples(extract_triples(sf)))
-    e = matchers.with_virtual_doc(e)
-    org = F.regexp_extract(F.col("repo"), r"org(\d+)", 1).cast("int")
-    e = e.withColumn(
-        "side", F.when(org % 2 == 0, F.lit("src")).otherwise(F.lit("dst"))
-    ).filter(F.col("kind").isin("class", "function"))
+    e = assign_side(matchers.with_virtual_doc(e), sf).filter(
+        F.col("kind").isin("class", "function")
+    )
     src_e = e.filter(F.col("side") == "src")
     dst_e = e.filter(F.col("side") == "dst")
     pairs = blocking.candidate_pairs(src_e, dst_e)
