@@ -57,26 +57,14 @@ def main() -> None:
     stream = read_file_events(
         spark, args.events, max_files_per_trigger=args.max_files_per_trigger
     )
-    if args.follow:
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: mt.apply_batch(df, bid)
-            )
-            .option(
-                "checkpointLocation", os.path.join(args.work, "_stream_chk")
-            )
-            .start()
-        )
-        q.awaitTermination()
-    else:
-        mt.maintain(stream)
-        for h in mt.history:
-            print(json.dumps(h))
-        if mt.last_outputs is not None:
-            print(json.dumps({
-                "final_version": mt.version,
-                "store": mt.prev_store.root,
-            }))
+    mt.maintain(stream, follow=args.follow)
+    for h in mt.history:
+        print(json.dumps(h))
+    if mt.last_outputs is not None:
+        print(json.dumps({
+            "final_version": mt.version,
+            "store": mt.prev_store.root,
+        }))
 
 
 if __name__ == "__main__":

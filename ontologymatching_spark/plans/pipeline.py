@@ -23,18 +23,20 @@ Every stage checkpoints through CheckpointStore (resume-from-snapshot), and
 every row carries lineage (repo, path, commit, content_sha256 + stage name).
 
 The same stage graph builds a KG from scratch and updates one: an update
-runs against the previous snapshot's store and its output equals a
-from-scratch build of the new corpus (tested). It reuses only what is local
-to a file or to a pair:
+runs against the previous snapshot's store and takes the diff as its
+input, the added or changed files and the (repo, path) keys of the
+deleted ones. Its output equals a from-scratch build of the new corpus
+(tested). It reuses only what is local to a file or to a pair, each
+time as the previous rows minus a broadcast of the touched keys (narrow,
+no shuffle):
 
-  - extraction is per file: triples of files whose (repo, path,
-    content_sha256) lineage is unchanged are carried over, and only the
-    diff is parsed;
+  - extraction is per file: triples of untouched files are carried over,
+    and only the changed files are parsed;
   - entity features (norm tiers, stem, virtual doc = own + same-module
-    sibling + path tokens) are file-local: ``prepared`` rows of unchanged
+    sibling + path tokens) are file-local: ``prepared`` rows of untouched
     files are carried over;
-  - BSM/PSM are pair-local: a candidate pair whose endpoints both come from
-    unchanged files keeps its previous sim_bsm/sim_psm.
+  - BSM/PSM are pair-local: a candidate pair with no endpoint in a
+    touched file keeps its previous sim_bsm/sim_psm.
 
 Everything global runs in full: blocking (per-key caps and rank-zip depend
 on global key counts), VMM (corpus-level IDF) and every stage from the
@@ -94,7 +96,6 @@ class PipelineConfig:
 # refuses to reuse a store with a different fingerprint.
 PIPELINE_CODE_VERSION = "r5"
 
-LINEAGE = ["repo", "path", "content_sha256"]
 # the previous snapshot's stages an update reads
 REUSED_STAGES = ("triples", "prepared", "scored_pairs")
 
@@ -194,42 +195,32 @@ def apply_structural_boost(scored: DataFrame, src_e: DataFrame,
     return scored.drop("sim").join(boosted, ["src_id", "dst_id"])
 
 
-def with_content_sha(src_files: DataFrame) -> DataFrame:
-    """Spark-side sha256 of ``content`` — bit-identical to the extractor's
-    hashlib digest (the repo's sha256 invariant test asserts F.sha2 ==
-    hashlib.sha256 hexdigest)."""
-    return src_files.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-
-
-def prev_lineage(prev: CheckpointStore) -> DataFrame:
-    """Distinct (repo, path, content_sha256) the previous run observed:
-    every parsed file has exactly one module entity, so the ``prepared``
-    module rows are one lineage row per file, with no shuffle."""
-    return prev.read("prepared").filter(F.col("kind") == "module").select(
-        *LINEAGE
-    )
-
-
 class KGPipeline:
-    """Builds the KG of ``src_files`` into ``store``. With ``prev``, the
-    store of the previous snapshot, the run is an update: triples and
-    prepared rows of files whose lineage is unchanged, and BSM/PSM
-    scores of candidate pairs with no changed endpoint, are read from
-    ``prev``; only the changed files are parsed and only the remaining
-    pairs scored. Blocking, VMM and the tail run in full, so the output
-    equals a build from scratch. ``store`` must then hold no pipeline stage
-    of another run (it may hold the corpus the run reads; the previous
-    snapshot stays intact as the rollback point), and ``__init__`` refuses
-    a ``prev`` that lacks a reused stage or was written under a different
-    code/config fingerprint. The src/dst split is a per-repo ``side``
-    column on ``src_files`` or the generator's repo naming (see
-    ``assign_side``).
+    """Builds the KG of the corpus ``files`` into ``store``. With ``prev``,
+    the store of the previous snapshot, the run is an update and its input
+    is the diff: ``files`` are the added or changed files and ``deleted``
+    the (repo, path) keys of the removed ones. The new corpus is the
+    previous one minus every touched key (``files`` ∪ ``deleted``) plus
+    ``files``, so a key in both is replaced, not removed. Triples and
+    prepared rows of untouched files, and BSM/PSM scores of candidate pairs
+    with no endpoint in a touched file, are read from ``prev``; only
+    ``files`` are parsed and only the remaining pairs scored. Blocking,
+    VMM and the tail run in full, so the output equals a build from
+    scratch. ``store`` must then hold no pipeline stage of another run
+    (the previous snapshot stays intact as the rollback point), and
+    ``__init__`` refuses a ``prev`` that lacks a reused stage or was
+    written under a different code/config fingerprint. The src/dst split
+    is a per-repo ``side`` column on ``files`` or the generator's repo
+    naming (see ``assign_side``).
 
-    After an update, ``last_stats`` holds its reuse counts: files, changed
-    files and candidate pairs from the stage manifests, rescored pairs from
-    an ``Observation`` on the write of ``scored_pairs``. It is None after a
-    build, and after an update that resumed ``scored_pairs`` from ``store``
-    instead of computing it (the observation then never ran)."""
+    After a run, ``n_files`` is the number of files in the KG: the module
+    rows of ``prepared`` (one per parsed file), observed on its write and
+    counted by a job only when ``prepared`` was resumed. After an update,
+    ``last_stats`` holds its reuse counts: files, changed files and
+    candidate pairs, rescored pairs from an ``Observation`` on the write of
+    ``scored_pairs``. It is None after a build, and after an update that
+    resumed ``scored_pairs`` from ``store`` instead of computing it (the
+    observation then never ran)."""
 
     def __init__(self, spark: SparkSession, store: CheckpointStore,
                  config: PipelineConfig | None = None,
@@ -238,7 +229,8 @@ class KGPipeline:
         self.store = store
         self.cfg = config or PipelineConfig()
         self.prev = prev
-        # reuse counts of the last update (see the class docstring)
+        # see the class docstring
+        self.n_files: int | None = None
         self.last_stats: dict | None = None
         if prev is None:
             return
@@ -258,67 +250,97 @@ class KGPipeline:
                 "semantics; rebuild it"
             )
 
-    def run(self, src_files: DataFrame) -> dict[str, DataFrame]:
-        """Runs (or resumes) every stage and returns them by name."""
-        cfg = self.cfg
-        st = self.store
-        prev = self.prev
-        # fingerprint first, before any stage commits: a store is only ever
-        # reusable together with the code/config that produced it — a resume
-        # against a store written under different semantics must fail fast,
-        # not silently mix stages
-        fp = config_fingerprint(cfg)
-        old = st.read_meta("pipeline")
+    def _fingerprint(self) -> str:
+        """The code/config fingerprint. A store written under another one
+        fails fast here instead of silently mixing stages."""
+        fp = config_fingerprint(self.cfg)
+        old = self.store.read_meta("pipeline")
         if old is not None and old.get("fingerprint") != fp:
             raise ValueError(
                 "checkpoint store was written with a different code/config "
                 "fingerprint; resume with the original config or use a "
                 "fresh store"
             )
-        st.write_meta("pipeline", {"fingerprint": fp})
+        return fp
 
-        # the files to parse: all of them, or on an update only those whose
-        # path or content is new (files removed since fail the reuse
-        # semi-joins). Only the narrow lineage projection and the diff are
-        # committed, never the corpus with its content.
-        parse = src_files
+    def outputs(self) -> dict[str, DataFrame]:
+        """The stage dict of the finished run in ``store``, read back from
+        its committed stages (no job)."""
+        self._fingerprint()
+        st = self.store
+        triples = st.read("triples")
+        return {
+            # not committed: a filter over the committed triples
+            "mentions": mentions_from_triples(triples),
+            "links": st.read("links"),
+            "triples": triples,
+            "entities": st.read("prepared"),
+            "candidate_pairs": st.read("candidate_pairs"),
+            "scored_pairs": st.read(
+                "scored_boosted" if self.cfg.structural_boost
+                else "scored_pairs"
+            ),
+            "alignment": st.read("alignment"),
+            "nodes": st.read("nodes"),
+            "edges": st.read("edges"),
+        }
+
+    def run(self, files: DataFrame,
+            deleted: DataFrame | None = None) -> dict[str, DataFrame]:
+        """Runs (or resumes) every stage and returns them by name. On an
+        update, ``files`` and the (repo, path) keys ``deleted`` are the
+        diff (see the class docstring); a build takes the whole corpus as
+        ``files``, and ``deleted`` then names nothing."""
+        cfg = self.cfg
+        st = self.store
+        prev = self.prev
+        # fingerprint first, before any stage commits
+        st.write_meta("pipeline", {"fingerprint": self._fingerprint()})
+
+        # the files to parse: all of them, or on an update the diff,
+        # committed so that its manifest counts the changed files
+        parse = files
         if prev is not None:
-            v2_full = with_content_sha(src_files)
-            v2 = st.stage("_v2_lineage", lambda: v2_full.select(*LINEAGE))
-            parse = st.stage(
-                "_changed_files",
-                lambda: v2_full.join(prev_lineage(prev), LINEAGE, "left_anti")
-                .drop("content_sha256"),
-            )
+            parse = st.stage("_changed_files", lambda: files)
+            touched = parse.select("repo", "path")
+            if deleted is not None:
+                touched = touched.unionByName(deleted.select("repo", "path"))
+            touched = F.broadcast(touched)
 
         def carried(stage: str, fresh: DataFrame) -> DataFrame:
             """``fresh`` plus, on an update, the previous rows of ``stage``
-            whose source file is unchanged (a shuffle semi-join on the
-            lineage key: both sides are corpus-sized)."""
+            of untouched files (the diff-sized touched keys are the
+            broadcast side, so the previous rows do not shuffle)."""
             if prev is None:
                 return fresh
-            reused = prev.read(stage).join(v2, LINEAGE, "left_semi")
+            reused = prev.read(stage).join(touched, ["repo", "path"],
+                                           "left_anti")
             return reused.unionByName(fresh.select(*reused.columns))
 
         triples = st.stage(
             "triples", lambda: carried("triples", extract_triples(parse))
         )
 
+        # counts the KG's files (one module row each); attached only when
+        # prepared is computed, not resumed
+        modules: list[Observation] = []
+
         def _prepared():
             t = triples
             if prev is not None:
                 # the changed files' triples are already in the 'triples'
-                # stage: filter them back out rather than parse again.
-                # Virtual docs are file-local, so they see their full
-                # sibling set here.
-                t = t.join(
-                    F.broadcast(parse.select("repo", "path").dropDuplicates()),
-                    ["repo", "path"], "left_semi",
-                )
+                # stage: filter them back out rather than parse again (a
+                # deleted file has none; the broadcast is the one that
+                # ``carried`` reuses). Virtual docs are file-local, so they
+                # see their full sibling set here.
+                t = t.join(touched, ["repo", "path"], "left_semi")
             e = matchers.with_virtual_doc(
                 matchers.prepare_entities(entities_from_triples(t))
             )
-            return carried("prepared", assign_side(e, parse))
+            modules.append(Observation("modules"))
+            return carried("prepared", assign_side(e, parse)).observe(
+                modules[0], F.count_if(F.col("kind") == "module").alias("n")
+            )
 
         prepared = st.stage("prepared", _prepared, inputs=["triples"])
 
@@ -344,20 +366,21 @@ class KGPipeline:
             fresh = pairs
             if prev is not None:
                 # previous BSM/PSM rows still valid: the pair is a candidate
-                # now and neither endpoint's file changed (the diff is the
-                # broadcast side)
-                unchanged = prepared.join(
-                    F.broadcast(parse.select("repo", "path")),
-                    ["repo", "path"], "left_anti",
-                ).select("entity_id")
+                # now and neither endpoint is an entity of a touched file
+                # (an entity id hashes a uri that names its file, and a
+                # deleted file has no entity left to pair)
+                moved = F.broadcast(
+                    prepared.join(touched, ["repo", "path"], "left_semi")
+                    .select("entity_id")
+                )
                 reusable = (
                     prev.read("scored_pairs")
                     .select(*ids, "src_uri", "dst_uri", "sim_bsm", "sim_psm")
+                    .join(moved.withColumnRenamed("entity_id", "src_id"),
+                          "src_id", "left_anti")
+                    .join(moved.withColumnRenamed("entity_id", "dst_id"),
+                          "dst_id", "left_anti")
                     .join(pairs, ids, "left_semi")
-                    .join(unchanged.withColumnRenamed("entity_id", "src_id"),
-                          "src_id", "left_semi")
-                    .join(unchanged.withColumnRenamed("entity_id", "dst_id"),
-                          "dst_id", "left_semi")
                 )
                 fresh = pairs.join(reusable.select(*ids), ids, "left_anti")
             pf = matchers.psm(matchers.bsm(
@@ -446,25 +469,18 @@ class KGPipeline:
 
         edges = st.stage("edges", _edges, inputs=["nodes", "triples", "links"])
 
+        self.n_files = (
+            modules[0].get["n"] if modules
+            else prepared.filter(F.col("kind") == "module").count()
+        )
         self.last_stats = None
         if rescored:
             self.last_stats = {
-                "n_files": st.rows("_v2_lineage"),
+                "n_files": self.n_files,
                 "n_files_changed": st.rows("_changed_files"),
                 "n_pairs": st.rows("candidate_pairs"),
                 # pairs that could NOT reuse a previous BSM/PSM row — new
-                # pairs plus pairs with a changed endpoint
+                # pairs plus pairs with an endpoint in a touched file
                 "n_pairs_rescored": rescored[0].get["n"],
             }
-
-        return {
-            "mentions": mentions,
-            "links": links,
-            "triples": triples,
-            "entities": prepared,
-            "candidate_pairs": pairs,
-            "scored_pairs": scored,
-            "alignment": alignment,
-            "nodes": nodes,
-            "edges": edges,
-        }
+        return self.outputs()

@@ -30,17 +30,17 @@ order is the stream's arrival order, as with any log-structured source.
 
 Scale notes (100 TB story):
 
-  * The fold (prev corpus ∖ batch keys ∪ batch upserts) is an anti-join
-    keyed on (repo, path) with the diff-sized batch side broadcast, so the
-    corpus side does not shuffle. It commits as the ``corpus`` stage of
-    the version's store, which writes the whole folded corpus as a parquet
-    overwrite. The per-batch write is therefore corpus-sized.
+  * A batch is handed to the update as its diff: the deduplicated upserts
+    (committed as the diff-sized ``_changed_files`` stage) and the
+    (repo, path) keys the batch touches. No per-batch write is
+    corpus-sized; previous rows are reused minus a broadcast of the
+    touched keys, so the corpus side does not shuffle.
   * Re-matching cost per batch is the update's: re-parse + re-score only
     what the file diff touches (pair-local reuse), global stages recompute
     on alignment-sized inputs.
-  * Each version is one ``CheckpointStore``: the folded corpus commits as
-    its ``corpus`` stage, then every pipeline stage as its own, so a kill
-    at any stage boundary resumes from the last committed stage.
+  * Each version is one ``CheckpointStore`` that commits every pipeline
+    stage as its own, so a kill at any stage boundary resumes from the
+    last committed stage.
   * Store retention is bounded (``retain``): the maintainer keeps the
     last N snapshot stores (the rollback window) and removes older ones.
 """
@@ -86,17 +86,17 @@ def read_file_events(spark: SparkSession, src_dir: str,
 
 
 class StreamingKGMaintainer:
-    """foreachBatch sink that folds each microbatch of file events into the
-    maintained corpus and re-matches it with ``KGPipeline`` against the
-    previous snapshot's store (first batch: a full build).
+    """foreachBatch sink that hands each microbatch of file events, as its
+    upserts and the keys it touches, to ``KGPipeline`` run against the
+    previous snapshot's store (first batch: a full build of its upserts).
 
     After ``maintain()`` drains (availableNow), ``last_outputs`` holds the
     standard KGPipeline stage dict for the final corpus, ``prev_store`` the
-    snapshot store it was built in (its ``corpus`` stage is the folded
-    corpus), and ``history`` one record per batch (version, row counts, the
-    update's reuse stats). Invariant (tested): ``last_outputs`` is
-    bit-identical to a from-scratch ``KGPipeline.run`` on the same final
-    corpus."""
+    snapshot store it was built in (its ``prepared`` module rows are the
+    corpus' files, one lineage row each), and ``history`` one record per
+    batch (version, row counts, the update's reuse stats). Invariant
+    (tested): ``last_outputs`` is bit-identical to a from-scratch
+    ``KGPipeline.run`` on the same final corpus."""
 
     def __init__(self, spark: SparkSession, work_dir: str,
                  config: PipelineConfig | None = None, retain: int = 2):
@@ -118,10 +118,10 @@ class StreamingKGMaintainer:
         """Kill-and-restart resume: adopt the newest COMPLETE snapshot left
         in work_dir (``edges``, the last stage, committed), so a restarted
         maintainer continues incrementally instead of re-bootstrapping, and
-        expose it as ``last_outputs`` (every stage resumes, so that run
-        only reads). The stream's own checkpoint (_stream_chk) makes the
-        source re-deliver only undrained drops; a batch that died half-way
-        is redelivered and resumes its own committed stages."""
+        expose its committed stages as ``last_outputs``. The stream's own
+        checkpoint (_stream_chk) makes the source re-deliver only undrained
+        drops; a batch that died half-way is redelivered and resumes its
+        own committed stages."""
         versions = sorted(
             int(d[len("store_v"):])
             for d in os.listdir(self.work_dir)
@@ -134,20 +134,22 @@ class StreamingKGMaintainer:
                 self.prev_store = store
                 self.last_outputs = KGPipeline(
                     self.spark, store, self.cfg
-                ).run(store.read("corpus"))
+                ).outputs()
                 break
 
-    # -- per-batch fold + re-match -----------------------------------------
+    # -- per-batch re-match -------------------------------------------------
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         import time
+
+        from ..partitions import fan_parts
 
         t0 = time.time()
         spark = self.spark
         # last-writer-wins within the batch: the producer's seq is the
         # order; (repo, path) ties beyond seq cannot occur in a well-formed
         # log, and the rest of the event breaks them, so any two distinct
-        # events are ordered and the fold does not depend on row order.
+        # events are ordered and the batch does not depend on row order.
         w = Window.partitionBy("repo", "path").orderBy(
             F.col("seq").desc(), F.col("commit").desc(),
             F.col("deleted").desc(), F.col("lang").desc(),
@@ -159,31 +161,16 @@ class StreamingKGMaintainer:
             .drop("_rn")
         )
         # a NULL deleted flag (the schema is nullable) must not silently act
-        # as a tombstone: ~NULL filters the row out of upserts while its key
-        # still drives the anti-join, deleting the file from the corpus on a
-        # malformed event (ADVICE r05). Treat NULL as "not deleted".
+        # as a tombstone, deleting the file from the corpus on a malformed
+        # event. Treat NULL as "not deleted".
         upserts = latest.filter(
             ~F.coalesce(F.col("deleted"), F.lit(False))
         ).select(*CORPUS_COLS)
-        keys = latest.select("repo", "path")
+        # the source's partitioning would otherwise be preserved: a
+        # single-file bootstrap drop is a single split, and every stage of
+        # the build would scan the corpus as ONE split
+        upserts = upserts.repartition(min(fan_parts(upserts), 64))
         prev = self.prev_store
-
-        def _fold():
-            from ..partitions import fan_parts
-
-            if prev is None:
-                new_corpus = upserts
-            else:
-                # batch side is diff-sized: broadcast it into the anti-join
-                # so the corpus side never shuffles
-                new_corpus = prev.read("corpus").join(
-                    F.broadcast(keys), ["repo", "path"], "left_anti"
-                ).unionByName(upserts)
-            # multi-file snapshot: the source's partitioning would otherwise
-            # be preserved (a single-file bootstrap drop → a single part
-            # file → every downstream pipeline read scans the corpus as ONE
-            # split, the round-3 single-file trap — ADVICE r05)
-            return new_corpus.repartition(min(fan_parts(new_corpus), 64))
 
         version = self.version + 1
         root = self._store_path(version)
@@ -195,9 +182,11 @@ class StreamingKGMaintainer:
             shutil.rmtree(root)
             store = CheckpointStore(spark, root)
             store.write_meta("batch", {"batch_id": batch_id})
-        corpus = store.stage("corpus", _fold)
         pipe = KGPipeline(spark, store, self.cfg, prev=prev)
-        out = pipe.run(corpus)
+        # every key of the batch leaves the previous corpus, and comes back
+        # if its latest event is an upsert: the removed keys are the raw
+        # batch keys, with no last-writer-wins pass to run again
+        out = pipe.run(upserts, batch_df.select("repo", "path"))
         # every stage, the tail (alignment/edges) included, is committed by
         # st.stage before run() returns, so a crash between batches resumes
         # from a complete snapshot; the row counts come from the manifests
@@ -209,7 +198,7 @@ class StreamingKGMaintainer:
             {
                 "batch_id": batch_id,
                 "version": version,
-                "n_files": store.rows("corpus"),
+                "n_files": pipe.n_files,
                 "n_alignment": store.rows("alignment"),
                 "n_edges": store.rows("edges"),
                 "stats": pipe.last_stats,
@@ -227,23 +216,16 @@ class StreamingKGMaintainer:
 
     # -- drive ---------------------------------------------------------------
 
-    def maintain(self, src_stream: DataFrame,
-                 await_termination: bool = True):
-        """Attach to a FILE_EVENT_SCHEMA stream and drain it availableNow
-        (each producer drop = one snapshot with the default reader). For a
-        long-lived continuous job, pass a stream without availableNow
-        semantics and keep the returned query running."""
-        q = (
-            src_stream.writeStream.foreachBatch(
-                lambda df, bid: self.apply_batch(df, bid)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(self.work_dir, "_stream_chk"),
-            )
-            .trigger(availableNow=True)
-            .start()
+    def maintain(self, src_stream: DataFrame, follow: bool = False) -> None:
+        """Attach to a FILE_EVENT_SCHEMA stream (each producer drop = one
+        snapshot with the default reader) and drain it availableNow, or
+        with ``follow`` keep the query running on new drops until it
+        stops or fails."""
+        w = src_stream.writeStream.foreachBatch(
+            lambda df, bid: self.apply_batch(df, bid)
+        ).option(
+            "checkpointLocation", os.path.join(self.work_dir, "_stream_chk")
         )
-        if await_termination:
-            q.awaitTermination()
-        return q
+        if not follow:
+            w = w.trigger(availableNow=True)
+        w.start().awaitTermination()

@@ -1,8 +1,8 @@
 """Updates (``KGPipeline`` with ``prev``, plans/pipeline.py): the hard
-invariant is REBUILD EQUALITY — running the pipeline on corpus v2 against
-the v1 checkpoint store produces bit-identical outputs to a from-scratch
-KGPipeline run on v2 — while re-parsing only the changed files and
-re-scoring only pairs with a changed endpoint."""
+invariant is REBUILD EQUALITY — running the pipeline on the v1 → v2 diff
+against the v1 checkpoint store produces bit-identical outputs to a
+from-scratch KGPipeline run on v2 — while re-parsing only the changed
+files and re-scoring only pairs with a changed endpoint."""
 
 from __future__ import annotations
 
@@ -24,8 +24,22 @@ ALIGN_COLS = ["src_uri", "dst_uri", "sim"]
 SCORED_COLS = ["src_id", "dst_id", "src_uri", "dst_uri",
                "sim_bsm", "sim_psm", "sim_vmm", "sim"]
 NODE_COLS = ["canonical_id", "entity_id", "uri", "kind", "repo", "path",
-             "content_sha256"]
-EDGE_COLS = ["src_canonical", "dst_canonical", "pred", "repo", "path"]
+             "commit", "content_sha256"]
+EDGE_COLS = ["src_canonical", "dst_canonical", "pred", "repo", "path",
+             "commit", "content_sha256"]
+CORPUS_SCHEMA = ("repo string, path string, commit string, lang string, "
+                 "content string")
+
+
+def _diff(spark, old, new):
+    """The update's input turning corpus ``old`` into ``new``: the added or
+    changed files, and the (repo, path) keys of the removed ones."""
+    m = new.merge(old, how="left", indicator=True)
+    files = m.loc[m["_merge"] == "left_only", list(new.columns)]
+    gone = old.merge(new[["repo", "path"]], how="left", indicator=True)
+    deleted = gone.loc[gone["_merge"] == "left_only", ["repo", "path"]]
+    return (spark.createDataFrame(files, CORPUS_SCHEMA),
+            spark.createDataFrame(deleted, "repo string, path string"))
 
 
 def _mutate(v1):
@@ -89,7 +103,7 @@ def corpora(v1_builds, request):
 
 @pytest.mark.parametrize("corpora", list(CONFIGS), indirect=True)
 def test_incremental_equals_full_rebuild(spark, corpora):
-    _, v2, store_v1, _, cfg = corpora
+    v1, v2, store_v1, _, cfg = corpora
     full = KGPipeline(
         spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_full_")),
         cfg,
@@ -97,7 +111,7 @@ def test_incremental_equals_full_rebuild(spark, corpora):
     inc = KGPipeline(
         spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_new_")),
         cfg, prev=store_v1,
-    ).run(spark.createDataFrame(v2))
+    ).run(*_diff(spark, v1, v2))
 
     assert _rows(inc["scored_pairs"], SCORED_COLS) == _rows(
         full["scored_pairs"], SCORED_COLS
@@ -115,7 +129,7 @@ def test_incremental_rescores_only_the_diff(spark, corpora):
         spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_s_")),
         prev=store_v1,
     )
-    out = pipe.run(spark.createDataFrame(v2))
+    out = pipe.run(*_diff(spark, v1, v2))
     s = pipe.last_stats
     # 3 touched files (2 rewrites + 1 added); the removed file is not in v2
     assert s["n_files_changed"] == 3
@@ -151,7 +165,8 @@ def test_incremental_noop_corpus(spark, corpora):
         spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_n_")),
         prev=store_v1,
     )
-    inc = pipe.run(spark.createDataFrame(v1))
+    inc = pipe.run(spark.createDataFrame(v1.iloc[0:0], CORPUS_SCHEMA))
+    assert pipe.last_stats["n_files"] == len(v1)
     assert pipe.last_stats["n_files_changed"] == 0
     assert pipe.last_stats["n_pairs_rescored"] == 0
     assert _rows(inc["alignment"], ALIGN_COLS) == _rows(
@@ -180,11 +195,11 @@ def test_incremental_validates_prev_store(spark, corpora):
 def test_incremental_lineage_survives(spark, corpora):
     """Every incremental nodes row still carries the sha256 of its v2
     source file (the per-row invariant from BASELINE.json's input_hint)."""
-    _, v2, store_v1, _, _ = corpora
+    v1, v2, store_v1, _, _ = corpora
     inc = KGPipeline(
         spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_l_")),
         prev=store_v1,
-    ).run(spark.createDataFrame(v2))
+    ).run(*_diff(spark, v1, v2))
     v2df = spark.createDataFrame(v2).withColumn(
         "sha", F.sha2(F.col("content"), 256)
     )
@@ -195,16 +210,15 @@ def test_incremental_lineage_survives(spark, corpora):
 
 
 def test_prev_lineage_is_one_row_per_file(spark, monkeypatch):
-    """``prev_lineage`` reads the previous run's module entities: one
-    (repo, path, content_sha256) row per parsed file, equal to the
+    """The ``prepared`` module rows, which a run's ``n_files`` counts, are
+    one (repo, path, content_sha256) row per parsed file, equal to the
     distinct lineage of its triples, for the generator corpus plus a
     module with no declarations and an xml file."""
     import hashlib
 
     import pandas as pd
 
-    from ontologymatching_spark.plans.pipeline import LINEAGE, prev_lineage
-
+    lineage = ["repo", "path", "content_sha256"]
     v1, _ = generate_corpus(n_repos=4, files_per_repo=3, seed=11)
     xml = ('<module name="mod9">\n  <import module="other.mod"/>\n'
            '  <class name="FooBar"/>\n</module>\n')
@@ -215,16 +229,17 @@ def test_prev_lineage_is_one_row_per_file(spark, monkeypatch):
          "lang": "xml", "content": xml},
     ])], ignore_index=True)
     store = CheckpointStore(spark, tempfile.mkdtemp(prefix="inc_lin_"))
-    # commit triples and prepared only: prev_lineage reads nothing else
+    # commit triples and prepared only
     monkeypatch.setenv("KG_FAIL_BEFORE_STAGE", "candidate_pairs")
     with pytest.raises(RuntimeError, match="injected crash"):
         KGPipeline(spark, store).run(spark.createDataFrame(files))
 
-    got = _rows(prev_lineage(store), LINEAGE)
+    modules = store.read("prepared").filter(F.col("kind") == "module")
+    got = _rows(modules, lineage)
     want = sorted(
         (r.repo, r.path, hashlib.sha256(r.content.encode()).hexdigest())
         for r in files.itertuples()
     )
     assert got == want
     assert got == _rows(
-        store.read("triples").select(*LINEAGE).dropDuplicates(), LINEAGE)
+        store.read("triples").select(*lineage).dropDuplicates(), lineage)

@@ -10,17 +10,20 @@ resuming that half-written snapshot."""
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import shutil
 import tempfile
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from ontologymatching_spark.corpus.generator import generate_corpus
 from ontologymatching_spark.plans.checkpoint import CheckpointStore
 from ontologymatching_spark.plans.pipeline import KGPipeline
 from ontologymatching_spark.streaming.kgstream import (
+    CORPUS_COLS,
     FILE_EVENT_SCHEMA,
     StreamingKGMaintainer,
     read_file_events,
@@ -28,19 +31,37 @@ from ontologymatching_spark.streaming.kgstream import (
 
 ALIGN_COLS = ["src_uri", "dst_uri", "sim"]
 NODE_COLS = ["canonical_id", "entity_id", "uri", "kind", "repo", "path",
-             "content_sha256"]
-EDGE_COLS = ["src_canonical", "dst_canonical", "pred", "repo", "path"]
+             "commit", "content_sha256"]
+EDGE_COLS = ["src_canonical", "dst_canonical", "pred", "repo", "path",
+             "commit", "content_sha256"]
+TRIPLE_COLS = ["subj", "pred", "obj", "repo", "path", "commit",
+               "content_sha256"]
 LIVE_COLS = {"alignment": ALIGN_COLS, "nodes": NODE_COLS, "edges": EDGE_COLS}
 # every stage a default-config update batch commits, in commit order
-BATCH_STAGES = ["corpus", "_v2_lineage", "_changed_files", "triples",
-                "prepared", "candidate_pairs", "scored_pairs", "alignment",
-                "nodes", "links", "edges"]
+BATCH_STAGES = ["_changed_files", "triples", "prepared", "candidate_pairs",
+                "scored_pairs", "alignment", "nodes", "links", "edges"]
 EVENT_COLS = ["repo", "path", "commit", "lang", "content", "deleted", "seq"]
-CORPUS_COLS = ["repo", "path", "commit", "lang", "content"]
+LINEAGE = ["repo", "path", "commit", "content_sha256"]
 
 
 def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _files(store: CheckpointStore) -> list[tuple]:
+    """The files of a snapshot's KG: the lineage of its ``prepared`` module
+    rows, one per file."""
+    modules = store.read("prepared").filter(F.col("kind") == "module")
+    return _rows(modules, LINEAGE)
+
+
+def _corpus_files(corpus: pd.DataFrame) -> list[tuple]:
+    """The lineage rows ``_files`` should read for ``corpus``."""
+    return sorted(
+        (r.repo, r.path, r.commit,
+         hashlib.sha256(r.content.encode()).hexdigest())
+        for r in corpus.itertuples()
+    )
 
 
 def _write_drop(spark, pdf: pd.DataFrame, src_dir: str, name: str) -> None:
@@ -131,7 +152,7 @@ def stream_run(spark):
     e1 = _events(v1, None, seq0=0)
     e2 = _events(v2, v1, seq0=1000)
     # within-batch last-writer-wins probe: a LOWER-seq bogus rewrite of a
-    # path that e2 also upserts — the fold must keep the e2 (higher-seq) row
+    # path that e2 also upserts — the batch must keep the e2 (higher-seq) row
     probe_path = e2.loc[~e2.deleted].iloc[0]
     bogus = probe_path.copy()
     bogus["content"] = "class BogusOverwritten {\n}\n"
@@ -162,9 +183,7 @@ def rebuild_v3(spark, stream_run):
 def test_stream_folds_to_final_corpus(spark, stream_run):
     _, _, v3, _, _, mt = stream_run
     assert [h["version"] for h in mt.history] == [0, 1, 2]
-    got = mt.prev_store.read("corpus")
-    want = spark.createDataFrame(v3[CORPUS_COLS])
-    assert _rows(got, CORPUS_COLS) == _rows(want, CORPUS_COLS)
+    assert _files(mt.prev_store) == _corpus_files(v3)
     # the history's counts come from the stage manifests, not from count
     # jobs: they must still be the row counts
     last = mt.history[-1]
@@ -251,10 +270,7 @@ def test_stream_tombstone_only_batch(spark):
 
     assert [h["version"] for h in mt.history] == [0, 1]
     assert mt.history[1]["stats"]["n_files_changed"] == 0  # pure deletion
-    got = mt.prev_store.read("corpus")
-    assert _rows(got, CORPUS_COLS) == _rows(
-        spark.createDataFrame(v2[CORPUS_COLS]), CORPUS_COLS
-    )
+    assert _files(mt.prev_store) == _corpus_files(v2)
     full = KGPipeline(
         spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kgstomb_f_"))
     ).run(spark.createDataFrame(v2))
@@ -268,7 +284,7 @@ def test_stream_tombstone_only_batch(spark):
 
 def test_stream_equal_seq_commit_is_deterministic(spark):
     """Two events for one (repo, path) with equal (seq, commit) but
-    different content: the fold must pick the same one whichever row comes
+    different content: the batch must pick the same one whichever row comes
     first in the batch."""
     v1, _ = generate_corpus(n_repos=4, files_per_repo=2, seed=31)
     ev = _events(v1, None, seq0=0)
@@ -289,9 +305,54 @@ def test_stream_equal_seq_commit_is_deterministic(spark):
             spark.createDataFrame(batch[EVENT_COLS], schema=FILE_EVENT_SCHEMA),
             0,
         )
-        corpora.append(_rows(mt.prev_store.read("corpus"), CORPUS_COLS))
+        corpora.append(_files(mt.prev_store))
     assert corpora[0] == corpora[1]
     assert len(corpora[0]) == len(v1)
+
+
+@pytest.fixture(scope="module")
+def recommitted(spark):
+    """A stream of two single-file drops: a bootstrap, then a re-upsert of
+    one file with its content unchanged and a new commit. Returns the
+    work dir, the maintainer, and a from-scratch build of the final
+    corpus."""
+    v1, _ = generate_corpus(n_repos=4, files_per_repo=3, seed=11)
+    v2 = v1.copy()
+    v2.loc[0, "commit"] = "f" * 40
+    assert v2.loc[0, "commit"] != v1.loc[0, "commit"]
+    ev = v2.iloc[[0]].assign(deleted=False, seq=1000)
+    work = tempfile.mkdtemp(prefix="kgrecommit_work_")
+    src = tempfile.mkdtemp(prefix="kgrecommit_src_")
+    _write_drop(spark, _events(v1, None, seq0=0), src, "00_v1.parquet")
+    _write_drop(spark, ev, src, "01_recommit.parquet")
+    mt = StreamingKGMaintainer(spark, work)
+    mt.maintain(read_file_events(spark, src))
+    full = KGPipeline(
+        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="kgrc_full_"))
+    ).run(spark.createDataFrame(v2))
+    return work, mt, full
+
+
+def test_single_drop_bootstrap_fans_out(spark, recommitted):
+    """A bootstrap that arrives as one single-file drop is one split; the
+    maintainer fans it out, so its ``triples`` stage commits more than one
+    part file instead of scanning the corpus as one split downstream."""
+    work, mt, _ = recommitted
+    store = CheckpointStore(spark, os.path.join(work, "store_v00000"))
+    assert store.manifest("triples")["n_files"] > 1
+
+
+def test_recommit_with_same_content_takes_new_commit(recommitted):
+    """A file re-upserted with unchanged content and a new commit is part
+    of the batch's diff: the live triples, nodes and edges carry the new
+    commit, as a from-scratch build does."""
+    _, mt, full = recommitted
+    for name, cols in (("triples", TRIPLE_COLS), ("nodes", NODE_COLS),
+                       ("edges", EDGE_COLS)):
+        live = _rows(mt.last_outputs[name], cols)
+        assert ("f" * 40) in {r[cols.index("commit")] for r in live}, name
+        assert live == _rows(full[name], cols), name
+    assert mt.history[1]["stats"]["n_files_changed"] == 1
 
 
 def _event_df(spark, events: pd.DataFrame):
@@ -365,7 +426,7 @@ def test_batch_killed_before_stage_resumes(spark, bootstrapped, stage,
 
 def test_other_batch_does_not_resume_half_written_snapshot(
         spark, bootstrapped, monkeypatch):
-    """Batch 1 dies before ``prepared`` with its corpus, pins and triples
+    """Batch 1 dies before ``prepared`` with its diff and triples
     committed. After a restart, a DIFFERENT batch 2 lands at the
     same version: it must start that snapshot empty, so the live KG equals
     a from-scratch build of batch 2's fold, with batch 1's rows nowhere."""
@@ -380,9 +441,7 @@ def test_other_batch_does_not_resume_half_written_snapshot(
             _event_df(spark, batch1), 1
         )
     monkeypatch.delenv("KG_FAIL_BEFORE_STAGE")
-    assert set(_manifests(store)) == {
-        "corpus", "_v2_lineage", "_changed_files", "triples"
-    }
+    assert set(_manifests(store)) == {"_changed_files", "triples"}
 
     # batch 2: rename a class in a dst-side file, add one file
     v2 = v1.copy()
@@ -400,9 +459,7 @@ def test_other_batch_does_not_resume_half_written_snapshot(
     mt.apply_batch(_event_df(spark, _events(v2, v1, seq0=1000)), 2)
     assert mt.version == 1
     assert mt.history[-1]["stats"]["n_files_changed"] == 2
-    assert _rows(mt.prev_store.read("corpus"), CORPUS_COLS) == _rows(
-        spark.createDataFrame(v2[CORPUS_COLS]), CORPUS_COLS
-    )
+    assert _files(mt.prev_store) == _corpus_files(v2)
     want = _live_rows(spark, v2)
     for name, cols in LIVE_COLS.items():
         assert _rows(mt.last_outputs[name], cols) == want[name], name
